@@ -4,32 +4,32 @@ embedding → keyed upsert (reference §3.1, src/main.py:239-378).
 Where the reference runs a python asyncio loop with one task per day,
 this plan is ONE lazy DataFrame DAG over all days:
 
-    sources (6 endpoints × all days, long form)
-      → permissive cast (P2) → per-(endpoint, day) aggregate (A1/A2)
-      → N-way join on day (J2; every aggregate is 1 row/day → broadcast)
+    sources (6 endpoints × all days, fetched on the driver, decoded to
+             (date_from, endpoint, field, value) cells)
+      → ONE pandas → Arrow literal relation (a JVM LocalRelation)
+      → ONE groupBy(date_from) with a conditional aggregate per
+        (endpoint, field): permissive cast (P2) + A1/A2 semantics
       → left join weather (missing weather proceeds, missing ERCOT
         aborts the row — reference sentence_builder.py:122-127)
       → derived renewables (P8) → 11-line sentence (U2, pure expression)
       → pandas_udf embedding (U1) → parquet/JDBC upsert by vector_id (K1)
 
-At 100 TB the only changes are at the edges: envelopes land as
-date-partitioned JSON files read by ``envelope_files_to_df`` (partition
-pruning + parallel parse), and the sink becomes the JDBC upsert writer.
-The middle of the DAG is already scale-ready: per-day aggregates are
-partial-aggregable, the day-level joins are trivially broadcast, and the
-embedding UDF batches via Arrow.
+The plan has one ERCOT leaf whatever the window length, and its row
+count rides the upsert as an ``Observation`` (no second pass). At scale
+the fetch can move executor-side: ``sources.ercot_datasource`` decodes
+through the same ``envelope_rows`` into the same long-form cells, one
+endpoint per read.
 """
 
 from __future__ import annotations
 
-from datetime import date, timedelta
-
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.functions.embedding import make_embed_udf, scrubbed_for_embedding
 from quantum_rag_data_pipeline_spark.functions.formatting import semantic_sentence
-from quantum_rag_data_pipeline_spark.sources.ercot import ErcotQueries, envelope_to_df
+from quantum_rag_data_pipeline_spark.sources.ercot import ErcotQueries, day_windows, envelope_rows
 
 #: the fixed metric catalog (reference src/main.py:101-108,122-125,
 #: 140-144,159-162,180-183,203-205): endpoint → [(field, method, alias)]
@@ -65,45 +65,17 @@ METRIC_CATALOG: dict[str, list[tuple[str, str, str]]] = {
 }
 
 
-def day_windows(start: str, end: str) -> list[tuple[str, str]]:
-    """[(d, d+1) for d in [start, end)) — the reference's 2-day windows
-    with 1-day slide (src/main.py:288-303,341-369)."""
-    d0, d1 = date.fromisoformat(start), date.fromisoformat(end)
-    out = []
-    d = d0
-    while d < d1:
-        out.append((d.isoformat(), (d + timedelta(days=1)).isoformat()))
-        d += timedelta(days=1)
-    return out
-
-
-def aggregate_endpoint(df: DataFrame, catalog: list[tuple[str, str, str]]) -> DataFrame:
-    """A1 with the reference's semantics: permissive cast per cell (P2),
-    missing field → NULL metric (P3 → N/A downstream), zero parseable
-    values → 0.0 (src/main.py:90-91)."""
-    aggs = []
-    for field, method, alias in catalog:
-        if field in df.columns:
-            c = F.col(field).try_cast("double")
-            if method == "average":
-                agg = F.avg(c)
-            elif method == "max":
-                agg = F.max(c)
-            else:
-                agg = F.sum(c)
-            aggs.append(F.coalesce(agg, F.lit(0.0)).alias(alias))
-        else:
-            aggs.append(F.max(F.lit(None).cast("double")).alias(alias))
-    return df.groupBy("date_from").agg(*aggs)
+#: A1/A2 aggregation methods of the catalog
+AGGREGATES = {"average": F.avg, "max": F.max, "sum": F.sum}
 
 
 def fetch_all_endpoints(
     spark: SparkSession, queries: ErcotQueries, start: str, end: str
-) -> dict[str, DataFrame]:
-    """Driver-side fetch of every (endpoint, day-window) envelope → one
-    long DataFrame per endpoint tagged with date_from. Payloads are page-
-    sized (100 rows); at scale this step is replaced by a partitioned
-    JSON landing zone (see module docstring)."""
+) -> tuple[DataFrame, dict[str, set[str]]]:
+    """Driver-side fetch of every (endpoint, day-window) envelope into
+    ONE long-form frame (date_from, endpoint, field, value), built
+    through pandas → Arrow so it plans as a JVM local relation, plus each
+    endpoint's header fields over the whole window."""
     fetchers = {
         "load_summary": queries.load_summary,
         "dsr_loads": queries.dsr_loads,
@@ -112,17 +84,36 @@ def fetch_all_endpoints(
         "ancillary_ecrss": lambda a, b: queries.as_offers(a, b, "ecrss"),
         "dam_hubavg_price": queries.dam_prices,
     }
-    out: dict[str, DataFrame] = {}
+    cells = []
+    headers: dict[str, set[str]] = {}
     for name, fetch in fetchers.items():
-        parts = []
+        header = headers[name] = set()
         for date_from, date_to in day_windows(start, end):
-            df = fetch(date_from, date_to).withColumn("date_from", F.lit(date_from))
-            parts.append(df)
-        unioned = parts[0]
-        for p in parts[1:]:
-            unioned = unioned.unionByName(p, allowMissingColumns=True)
-        out[name] = unioned
-    return out
+            for env in fetch(date_from, date_to):
+                header.update(f["name"] for f in env.get("fields", []))
+                cells += [(date_from, name, field, value) for field, value in envelope_rows(env)]
+    pdf = pd.DataFrame(cells, columns=["date_from", "endpoint", "field", "value"])
+    schema = "date_from string, endpoint string, field string, value string"
+    return spark.createDataFrame(pdf, schema), headers
+
+
+def daily_aggregates(cells: DataFrame, headers: dict[str, set[str]]) -> DataFrame:
+    """One row per day any endpoint served, one column per catalog alias,
+    with the reference's semantics: a field absent from the endpoint's
+    header → NULL (P3 → N/A downstream); a day the endpoint served with
+    zero parseable values → 0.0 (src/main.py:90-91); a day the endpoint
+    did not serve → NULL."""
+    aggs = []
+    for name, catalog in METRIC_CATALOG.items():
+        ours = F.col("endpoint") == name
+        served = F.when(F.max(ours), F.lit(0.0))
+        for field, method, alias in catalog:
+            if field in headers[name]:
+                value = F.when(ours & (F.col("field") == field), F.col("value").try_cast("double"))
+                aggs.append(F.coalesce(AGGREGATES[method](value), served).alias(alias))
+            else:
+                aggs.append(F.lit(None).cast("double").alias(alias))
+    return cells.groupBy("date_from").agg(*aggs)
 
 
 def build_daily_summaries(
@@ -136,31 +127,13 @@ def build_daily_summaries(
 ) -> DataFrame:
     """Returns one row per day: (vector_id, semantic_sentence, embedding,
     updated_at) — the pgvector sink row (FIXTURES.md §4)."""
-    endpoints = fetch_all_endpoints(spark, queries, start, end)
-    per_endpoint = {
-        name: aggregate_endpoint(df, METRIC_CATALOG[name]) for name, df in endpoints.items()
-    }
-    # day spine from the window list: each endpoint aggregate LEFT-joins
-    # onto it — a day missing from ONE endpoint keeps its row with NULL
-    # metrics (→ N/A in the sentence), matching the reference, where
+    # a day missing from ONE endpoint keeps its row with NULL metrics
+    # (→ N/A in the sentence), matching the reference, where
     # extract_field_values returns {} for an empty envelope but the day's
     # sentence still renders (src/main.py + sentence_builder N/A paths).
-    # Only a day with data from NO endpoint at all is aborted — the
-    # reference's fetch-returned-None case.
-    days = spark.createDataFrame(
-        [(a, b) for a, b in day_windows(start, end)], "date_from string, date_to string"
-    )
-    joined = days
-    markers = []
-    for name, agg in per_endpoint.items():
-        marker = f"_has_{name}"
-        markers.append(marker)
-        joined = joined.join(
-            F.broadcast(agg.withColumn(marker, F.lit(1))), "date_from", "left"
-        )
-    joined = joined.filter(
-        F.greatest(*[F.col(m).isNotNull() for m in markers])
-    ).drop(*markers)
+    # A day with data from NO endpoint forms no group — the reference's
+    # fetch-returned-None case.
+    joined = daily_aggregates(*fetch_all_endpoints(spark, queries, start, end))
     # DAM price parity (src/main.py:207): a falsy average (0.0 or missing)
     # renders N/A, not "0.00 $/MWh"; bround = Python round() half-even.
     raw_dam = F.col("dam_avg_price_raw")
@@ -176,7 +149,7 @@ def build_daily_summaries(
 
     sentence = semantic_sentence(
         date_from=F.col("date_from"),
-        date_to=F.col("date_to"),
+        date_to=F.date_add(F.col("date_from"), 1),
         agg_load_summary=F.col("agg_load_summary"),
         sum_telem_gen_mw=F.col("sum_telem_gen_mw"),
         dam_avg_price=F.col("dam_avg_price"),
@@ -213,12 +186,15 @@ def run_daily_summary_pipeline(
     encoder=None,
     embed_dim: int = 1536,
 ) -> int:
-    """End-to-end: build + upsert. Returns the number of summary rows.
-    Idempotent: re-running any window leaves the sink unchanged modulo
-    updated_at (K1 semantics)."""
+    """End-to-end: build + upsert. Returns the number of summary rows,
+    counted by an ``Observation`` riding the upsert's write (no second
+    pass over the lineage). Idempotent: re-running any window leaves the
+    sink unchanged modulo updated_at (K1 semantics)."""
     from quantum_rag_data_pipeline_spark.sinks.upsert import parquet_upsert
 
     rows = build_daily_summaries(spark, queries, weather_daily_avg, start, end, encoder, embed_dim)
-    out = rows.select("vector_id", "embedding", "semantic_sentence", "updated_at")
+    obs = Observation("daily_summary_rows")
+    out = rows.select("vector_id", "embedding", "semantic_sentence", "updated_at") \
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
     parquet_upsert(spark, out, sink_path, ["vector_id"], version_col="updated_at")
-    return out.count()
+    return obs.get["rows"]

@@ -8,14 +8,14 @@ metric fields with permissive numeric parsing.
 Spark-first re-expression:
 - a thin **client protocol** (injectable; the deterministic fake below is
   used everywhere in tests) fetches the envelope on the driver — payloads
-  are tiny (page size 100, reference ``queries.py:41-42``);
-- ``envelope_to_df`` turns the envelope into a proper DataFrame: the
-  ``fields`` header becomes the schema, records become rows, and ALL
-  values land as strings to be permissively cast downstream (P2);
-- at 100 TB the same envelope shape would be landed as JSON files and
-  read with ``spark.read.json`` — ``envelope_files_to_df`` does exactly
-  that, giving partitioned parallel ingest with predicate pushdown on
-  ``date=`` directory partitions;
+  are tiny (page size 100, reference ``queries.py:41-42``), and clients
+  holding live auth or test state need not pickle to Python workers;
+- ``envelope_rows`` decodes an envelope into long form, one
+  ``(field, value)`` per cell with ALL values as strings to be
+  permissively cast downstream (P2). ``plans.daily_summary`` collects
+  every (endpoint, day) envelope into ONE Arrow literal relation of these
+  cells, and the executor-side DataSource (``ercot_datasource``) decodes
+  through the same function;
 - query parameters (date range, settlementPoint, hourEnding, service
   type) are **pushdown by construction**: they are sent to the source,
   never filtered post-hoc (reference ``queries.py:66-74,241-253,282-286``).
@@ -31,12 +31,11 @@ import hashlib
 import math
 import random
 import time
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
+from datetime import date, timedelta
 from typing import Any, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql import SparkSession
 
 # endpoints mirrored from reference queries.py (routes at :63,:106,:147,
 # :188,:239,:280); service types validated per :233-237.
@@ -125,45 +124,34 @@ class FakeErcotClient:
         return {"fields": [{"name": f} for f in fields], "data": data}
 
 
-def envelope_to_df(spark: SparkSession, envelope: dict) -> DataFrame:
-    """The ``fields`` header becomes the StructType; every cell lands as a
-    string (permissive cast happens downstream with try_cast, preserving
-    the reference's drop-bad-cells semantics). Records shorter than the
-    header are right-padded with NULLs (reference skips those cells,
-    ``src/main.py:74``)."""
+def envelope_rows(envelope: dict) -> list[tuple[str, str | None]]:
+    """One ``(field, value)`` per cell: the ``fields`` header names the
+    cells, each record is read up to the header width and right-padded
+    with None (the reference skips those cells, ``src/main.py:74``), and
+    every value lands as a string (permissive cast happens downstream
+    with try_cast, preserving the reference's drop-bad-cells semantics)."""
     names = [f["name"] for f in envelope.get("fields", [])]
-    schema = StructType([StructField(n, StringType(), True) for n in names])
-    width = len(names)
-    rows = []
-    for rec in envelope.get("data", []):
-        vals = [None if v is None else str(v) for v in rec[:width]]
-        vals += [None] * (width - len(vals))
-        rows.append(tuple(vals))
-    return spark.createDataFrame(rows, schema)
+    return [
+        (name, None if i >= len(rec) or rec[i] is None else str(rec[i]))
+        for rec in envelope.get("data", [])
+        for i, name in enumerate(names)
+    ]
 
 
-def envelope_files_to_df(spark: SparkSession, path: str) -> DataFrame:
-    """Scale path: envelopes landed as JSON lines files (one envelope per
-    line) under ``date=YYYY-MM-DD/`` partition dirs → parallel distributed
-    parse with partition pruning. Same output shape as envelope_to_df
-    but long-form: (field STRING, value STRING, rec_idx BIGINT)."""
-    raw = spark.read.json(path)
-    names = F.transform(F.col("fields"), lambda f: f["name"])
-    return (
-        raw.select(F.posexplode(F.col("data")).alias("rec_idx", "rec"), names.alias("names"))
-        .select("rec_idx", F.explode(F.arrays_zip(
-            F.col("names").alias("field"),
-            F.col("rec").alias("value"),
-        )).alias("fv"))
-        .select("rec_idx", F.col("fv.field").alias("field"), F.col("fv.value").cast("string").alias("value"))
-    )
+def day_windows(start: str, end: str) -> list[tuple[str, str]]:
+    """[(d, d+1) for d in [start, end)) — the reference's 2-day windows
+    with 1-day slide (src/main.py:288-303,341-369)."""
+    d0, d1 = date.fromisoformat(start), date.fromisoformat(end)
+    return [((d0 + timedelta(days=i)).isoformat(), (d0 + timedelta(days=i + 1)).isoformat())
+            for i in range((d1 - d0).days)]
 
 
 class ErcotQueries:
     """Parameterized source views (S4–S9). Each method builds the request
     the reference builds (params at queries.py:69-74,109-110,150-151,
-    191-192,244-253,282-286) and returns a DataFrame. Predicates are part
-    of source construction — pushdown by construction."""
+    191-192,244-253,282-286) and returns the fetched envelope pages.
+    Predicates are part of source construction — pushdown by
+    construction."""
 
     def __init__(self, spark: SparkSession, client: EnvelopeClient,
                  page: int = 1, size: int = 100, paginate: bool = False):
@@ -175,20 +163,15 @@ class ErcotQueries:
         self.size = size
         self.paginate = paginate
 
-    def _fetch(self, endpoint: str, params: dict[str, Any]) -> DataFrame:
-        params = dict(params)
-        params.setdefault("page", self.page)
-        params.setdefault("size", self.size)
-        env = self.client.get_data(endpoint, params)
-        df = envelope_to_df(self.spark, env)
+    def _fetch(self, endpoint: str, params: dict[str, Any]) -> list[dict]:
+        params = {"page": self.page, "size": self.size, **params}
+        pages = [self.client.get_data(endpoint, params)]
         if self.paginate:
             page = self.page
-            while len(env.get("data", [])) == self.size:
+            while len(pages[-1].get("data", [])) == self.size:
                 page += 1
-                env = self.client.get_data(endpoint, {**params, "page": page})
-                if env.get("data"):
-                    df = df.unionByName(envelope_to_df(self.spark, env))
-        return df
+                pages.append(self.client.get_data(endpoint, {**params, "page": page}))
+        return pages
 
     def _window_params(self, date_from: str, date_to: str) -> dict[str, Any]:
         return {
@@ -196,20 +179,20 @@ class ErcotQueries:
             "SCEDTimestampTo": f"{date_to}T00:00:00",
         }
 
-    def load_summary(self, date_from: str, date_to: str) -> DataFrame:
+    def load_summary(self, date_from: str, date_to: str) -> list[dict]:
         return self._fetch(ENDPOINTS["load_summary"], self._window_params(date_from, date_to))
 
-    def dsr_loads(self, date_from: str, date_to: str) -> DataFrame:
+    def dsr_loads(self, date_from: str, date_to: str) -> list[dict]:
         return self._fetch(ENDPOINTS["dsr_loads"], self._window_params(date_from, date_to))
 
-    def gen_summary(self, date_from: str, date_to: str) -> DataFrame:
+    def gen_summary(self, date_from: str, date_to: str) -> list[dict]:
         return self._fetch(ENDPOINTS["gen_summary"], self._window_params(date_from, date_to))
 
-    def output_schedule(self, date_from: str, date_to: str) -> DataFrame:
+    def output_schedule(self, date_from: str, date_to: str) -> list[dict]:
         return self._fetch(ENDPOINTS["output_schedule"], self._window_params(date_from, date_to))
 
     def as_offers(self, date_from: str, date_to: str, service_type: str = "ecrss",
-                  hour_ending_from: int | None = None, hour_ending_to: int | None = None) -> DataFrame:
+                  hour_ending_from: int | None = None, hour_ending_to: int | None = None) -> list[dict]:
         service_type = service_type.lower()
         if service_type not in VALID_AS_TYPES:
             raise ValueError(f"service_type must be one of {VALID_AS_TYPES}, got {service_type!r}")
@@ -220,7 +203,7 @@ class ErcotQueries:
             params["hourEndingTo"] = hour_ending_to
         return self._fetch(ENDPOINTS["as_offers"].format(service_type=service_type), params)
 
-    def dam_prices(self, date_from: str, date_to: str, settlement_point: str = "HB_HUBAVG") -> DataFrame:
+    def dam_prices(self, date_from: str, date_to: str, settlement_point: str = "HB_HUBAVG") -> list[dict]:
         return self._fetch(
             ENDPOINTS["dam_prices"],
             {"deliveryDateFrom": date_from, "deliveryDateTo": date_to, "settlementPoint": settlement_point},

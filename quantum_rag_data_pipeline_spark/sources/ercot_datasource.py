@@ -1,10 +1,11 @@
 """Spark 4 Python DataSource for the ERCOT envelope API (S1 scale path).
 
-``envelope_to_df`` fetches on the driver — right for page-sized payloads.
-This DataSource is the 1000-executor version: one input partition per
-(endpoint, day-window), each EXECUTOR fetches and parses its own
-envelope, so ingest parallelism = number of windows, and Spark task
-retry covers transient fetch failures per partition.
+``plans.daily_summary`` fetches on the driver — right for page-sized
+payloads. This DataSource is the 1000-executor version: one input
+partition per (endpoint, day-window), each EXECUTOR fetches its own
+envelope and decodes it with the same ``envelope_rows``, so ingest
+parallelism = number of windows, and Spark task retry covers transient
+fetch failures per partition.
 
 Usage:
     from quantum_rag_data_pipeline_spark.sources.ercot_datasource import register
@@ -23,8 +24,6 @@ executor-side from its secret store — same hook)."""
 
 from __future__ import annotations
 
-from datetime import date, timedelta
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -32,6 +31,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
+
+from quantum_rag_data_pipeline_spark.sources.ercot import FakeErcotClient, day_windows, envelope_rows
 
 SCHEMA = "date_from string, field string, value string"
 
@@ -63,19 +64,10 @@ class ErcotEnvelopeReader(DataSourceReader):
         self.date_to = options["date_to"]
 
     def partitions(self):
-        d0, d1 = date.fromisoformat(self.date_from), date.fromisoformat(self.date_to)
-        parts = []
-        d = d0
-        while d < d1:
-            parts.append(WindowPartition(self.endpoint, d.isoformat(),
-                                         (d + timedelta(days=1)).isoformat()))
-            d += timedelta(days=1)
-        return parts
+        return [WindowPartition(self.endpoint, a, b) for a, b in day_windows(self.date_from, self.date_to)]
 
     def read(self, partition: WindowPartition):
         # executor-side fetch: one envelope per partition
-        from quantum_rag_data_pipeline_spark.sources.ercot import FakeErcotClient
-
         fields = FIXTURE_FIELDS.get(partition.endpoint, ["SCEDTimestamp", "value"])
         client = FakeErcotClient({partition.endpoint: fields})
         env = client.get_data(partition.endpoint, {
@@ -83,11 +75,8 @@ class ErcotEnvelopeReader(DataSourceReader):
             "SCEDTimestampTo": f"{partition.date_to}T00:00:00",
             "page": 1, "size": 100,
         })
-        names = [f["name"] for f in env["fields"]]
-        for rec in env["data"]:
-            for i, v in enumerate(rec):
-                if i < len(names):
-                    yield (partition.date_from, names[i], None if v is None else str(v))
+        for field, value in envelope_rows(env):
+            yield (partition.date_from, field, value)
 
 
 class ErcotTickStreamReader(SimpleDataSourceStreamReader):

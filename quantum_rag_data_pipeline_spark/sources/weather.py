@@ -16,6 +16,7 @@ import random
 from collections.abc import Iterable
 from datetime import date, datetime, timedelta
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,7 +50,9 @@ def _det_temp(city: str, when: str) -> float | None:
 
 def fake_daily_weather(spark: SparkSession, start: str, end: str) -> DataFrame:
     """S11 fake: per (city, date) daily tavg, schema
-    (city STRING, date DATE, tavg DOUBLE) — NULL tavg = missing reading."""
+    (city STRING, date DATE, tavg DOUBLE) — NULL tavg = missing reading.
+    Built through pandas → Arrow, so it plans as a JVM local relation
+    (Arrow masks pandas' NaN for a missing reading back to NULL)."""
     d0 = date.fromisoformat(start)
     d1 = date.fromisoformat(end)
     rows = []
@@ -58,7 +61,8 @@ def fake_daily_weather(spark: SparkSession, start: str, end: str) -> DataFrame:
         for city in CITIES:
             rows.append((city, d, _det_temp(city, d.isoformat())))
         d += timedelta(days=1)
-    return spark.createDataFrame(rows, "city string, date date, tavg double")
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["city", "date", "tavg"]), "city string, date date, tavg double")
 
 
 def fake_hourly_weather(spark: SparkSession, day: str, cities: Iterable[str] = HOURLY_CITIES) -> DataFrame:

@@ -18,7 +18,7 @@ from quantum_rag_data_pipeline_spark.sources.ercot import (
     FakeErcotClient,
     RetryingClient,
     ThrottledError,
-    envelope_to_df,
+    envelope_rows,
 )
 from quantum_rag_data_pipeline_spark.sources.weather import (
     daily_avg_temperature,
@@ -34,10 +34,17 @@ def test_p2_permissive_cast_drops_bad_cells(spark):
         "fields": [{"name": "x"}, {"name": "y"}],
         "data": [[1, "2.5"], ["N/A", 3], [None, "junk"], [4], []],
     }
-    df = envelope_to_df(spark, env)
-    out = df.select(
-        proj_ops.permissive_double("x").alias("x"), proj_ops.permissive_double("y").alias("y")
-    ).agg(F.sum("x").alias("sx"), F.count("x").alias("cx"), F.sum("y").alias("sy"))
+    cells = envelope_rows(env)
+    # every record yields one cell per header field, short ones padded
+    assert cells == [("x", "1"), ("y", "2.5"), ("x", "N/A"), ("y", "3"), ("x", None),
+                     ("y", "junk"), ("x", "4"), ("y", None), ("x", None), ("y", None)]
+    df = spark.createDataFrame(cells, "field string, value string")
+    v = proj_ops.permissive_double("value")
+    out = df.agg(
+        F.sum(F.when(F.col("field") == "x", v)).alias("sx"),
+        F.count(F.when(F.col("field") == "x", v)).alias("cx"),
+        F.sum(F.when(F.col("field") == "y", v)).alias("sy"),
+    )
     row = out.collect()[0]
     assert row["sx"] == 5.0 and row["cx"] == 2  # 1 + 4; "N/A"/None dropped
     assert row["sy"] == 5.5  # 2.5 + 3; short records padded with NULL
@@ -93,6 +100,9 @@ def test_s2_retry_backoff():
 
 def test_weather_daily_avg_and_wide_table(spark):
     daily = fake_daily_weather(spark, "2025-05-01", "2025-05-03")
+    # a missing reading is NULL, not NaN (two cities miss 2025-05-02)
+    assert daily.filter(F.col("tavg").isNull()).count() == 2
+    assert daily.filter(F.isnan("tavg")).count() == 0
     avg = daily_avg_temperature(daily)
     rows = {str(r["date"]): r["avg_temp_c"] for r in avg.collect()}
     assert len(rows) == 3

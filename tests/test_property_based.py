@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.operators.projection import permissive_double
-from quantum_rag_data_pipeline_spark.sources.ercot import envelope_to_df
+from quantum_rag_data_pipeline_spark.sources.ercot import envelope_rows
 
 # cells the ERCOT envelope can carry: numbers, numeric strings, junk,
 # nulls (reference src/main.py:74-79 drops unparseable per-cell)
@@ -42,10 +42,11 @@ def python_model_extract(records, idx):
 @given(data=st.lists(st.lists(cell, max_size=4), min_size=0, max_size=25))
 def test_permissive_cast_matches_reference_model(spark, data):
     env = {"fields": [{"name": f"c{i}"} for i in range(4)], "data": data}
-    df = envelope_to_df(spark, env)
+    df = spark.createDataFrame(envelope_rows(env), "field string, value string")
     for i in range(4):
         got = sorted(
-            r["v"] for r in df.select(permissive_double(f"c{i}").alias("v")).collect()
+            r["v"] for r in df.filter(F.col("field") == f"c{i}")
+            .select(permissive_double("value").alias("v")).collect()
             if r["v"] is not None
         )
         want = sorted(python_model_extract(data, i))
