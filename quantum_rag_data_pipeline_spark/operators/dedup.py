@@ -260,14 +260,11 @@ def _minhash_sigs_of_exploded(sh: DataFrame, id_col: str, num_hashes: int) -> Da
     ab = [(rng.randrange(1, P31), rng.randrange(0, P31)) for _ in range(num_hashes)]
     h32 = F.xxhash64("shingle").bitwiseAND(F.lit((1 << 32) - 1))
     sh = sh.select(F.col(id_col), h32.alias("_h32"))
-    aggs = [
-        F.min((F.lit(a) * F.col("_h32") + F.lit(b)) % F.lit(P31)).alias(f"_h{i}")
-        for i, (a, b) in enumerate(ab)
-    ]
-    grouped = sh.groupBy(id_col).agg(*aggs)
-    return grouped.select(
-        F.col(id_col), F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    # ONE SQL string, not num_hashes Column trees: built call by call the
+    # mins cost ~100 py4j round trips each; the JVM parses the identical
+    # algebra (INT a/b/P31, BIGINT _h32) in one.
+    mins = ", ".join(f"min(({a} * _h32 + {b}) % {P31})" for a, b in ab)
+    return sh.groupBy(id_col).agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def minhash_signatures_of_shingles(
@@ -313,14 +310,16 @@ def minhash_lsh_pairs(
     # entry persists until clearCache — harnesses running many queries
     # per session must clear periodically.
     sig = minhash_signatures(df, text_col, id_col, num_hashes, n).cache()
-    band_cols = [
-        F.xxhash64(F.concat_ws(",", *[F.element_at("sig", b * rows_per_band + r + 1).cast("string")
-                                      for r in range(rows_per_band)]), F.lit(b)).alias("band_hash")
+    # band hashes as one SQL string, for the same reason as the mins
+    band_hashes = ", ".join(
+        "xxhash64(concat_ws(',', " + ", ".join(
+            f"cast(element_at(sig, {b * rows_per_band + r + 1}) as string)"
+            for r in range(rows_per_band)) + f"), {b})"
         for b in range(bands)
-    ]
+    )
     buckets = sig.select(
         F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band", "band_hash"),
+        F.expr(f"posexplode(array({band_hashes}))").alias("band", "band_hash"),
     )
     cand = (
         buckets.alias("x")

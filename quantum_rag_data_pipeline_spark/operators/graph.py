@@ -147,7 +147,8 @@ def connected_components(
             "node": pd.Series(nodes, dtype="int64"),
             "cluster_id": pd.Series([find(n) for n in nodes], dtype="int64"),
         })
-        return edges.sparkSession.createDataFrame(pdf)
+        # an explicit schema: without Arrow an empty pdf has none to infer
+        return edges.sparkSession.createDataFrame(pdf, "node long, cluster_id long")
     # The symmetrized view the loop joins against each round: a UNION ALL
     # of two projections of the checkpointed blocks — cheap to re-read
     # per round, no second copy persisted.

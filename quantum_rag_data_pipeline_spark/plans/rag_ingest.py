@@ -13,11 +13,18 @@ ERCOT daily summary, done for arbitrary documents at corpus scale.
 Each stage is one of the already-tested operators; this module only
 composes them, which is the point: a pipeline is a DataFrame → DataFrame
 function chain, not an orchestration framework.
+
+``ingest`` runs the chain as ONE Spark action, the upsert's write. The
+per-stage row counts it returns are ``Observation``s riding that write,
+not extra passes over the lineage. The one exception: when the optimizer
+prunes an observed stage as empty (an empty corpus, every doc gated out,
+an empty semi-join side), that observation reports no row, and just that
+stage is counted with ``count()``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.functions.embedding import make_embed_udf
@@ -52,6 +59,20 @@ def near_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return docs.join(drop, id_col, "left_anti")
 
 
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _observed_count(obs: Observation, df: DataFrame) -> int:
+    """The row count ``obs`` saw on the write. When the optimizer pruned
+    the observed subtree as empty, no row is reported (``Observation.get``
+    would fail), and ``df`` is counted instead."""
+    if obs._jo.getRow().length() == 0:
+        return df.count()
+    return obs.get["n"]
+
+
 def ingest(
     spark: SparkSession,
     docs: DataFrame,
@@ -60,16 +81,19 @@ def ingest(
     embed_dim: int = 64,
     near_dup_threshold: float = 0.6,
 ) -> dict:
-    """Full ingest; returns stage-count telemetry. Idempotent by doc_id."""
+    """Full ingest; returns stage-count telemetry. Idempotent by doc_id.
+
+    One Spark action: each stage's row count is an ``Observation`` on
+    that stage's frame, collected while the upsert writes. Only when the
+    optimizer prunes an observed stage as empty (an empty corpus, every
+    doc gated out, an empty semi-join side) does that one stage get a
+    ``count()`` of its own."""
     from quantum_rag_data_pipeline_spark.sinks.upsert import parquet_upsert
 
-    n_raw = docs.count()
-    gated = quality_gate(docs)
-    n_gated = gated.count()
-    exact = exact_dedup(gated)
-    n_exact = exact.count()
-    deduped = near_dedup(exact, threshold=near_dup_threshold)
-    n_final = deduped.count()
+    raw, obs_raw = _observed(docs)
+    gated, obs_gated = _observed(quality_gate(raw))
+    exact, obs_exact = _observed(exact_dedup(gated))
+    deduped, obs_final = _observed(near_dedup(exact, threshold=near_dup_threshold))
 
     embed = make_embed_udf(encoder, embed_dim)
     rows = deduped.select(
@@ -78,8 +102,10 @@ def ingest(
         F.current_timestamp().alias("updated_at"),
     )
     parquet_upsert(spark, rows, store_path, ["doc_id"], version_col="updated_at")
-    return {"raw": n_raw, "after_quality": n_gated, "after_exact_dedup": n_exact,
-            "after_near_dedup": n_final}
+    return {"raw": _observed_count(obs_raw, docs),
+            "after_quality": _observed_count(obs_gated, gated),
+            "after_exact_dedup": _observed_count(obs_exact, exact),
+            "after_near_dedup": _observed_count(obs_final, deduped)}
 
 
 def serve_topk(spark: SparkSession, store_path: str, query_vecs: DataFrame,

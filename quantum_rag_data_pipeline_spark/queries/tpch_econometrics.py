@@ -1471,7 +1471,10 @@ def functional_dependency_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     # key types, so per-table native grouping produces the identical
     # counts; the (tbl, lhs, rhs) labels attach AFTER aggregation, on
     # one row per candidate. Still one job: the five aggregate subtrees
-    # union into a single DAG and execute concurrently.
+    # union into a single DAG and execute concurrently. A global
+    # aggregate emits a row even over an empty table; the oracle's
+    # GROUP BY emits none, so a candidate whose table is empty (n_rows
+    # NULL) is dropped.
     parts = []
     for tbl, (lhs, rhs) in tables.items():
         t = _t(spark, sf_dir, tbl)
@@ -1490,7 +1493,7 @@ def functional_dependency_profile(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.round(F.sum("max_r").cast("double") / F.sum("n_l"), 6)
                 .alias("fd_strength"),
                 (F.sum("n_l") == F.sum("max_r")).alias("holds_exactly"),
-            ).select(
+            ).where(F.col("n_rows").isNotNull()).select(
                 F.lit(tbl).alias("tbl"), F.lit(lhs).alias("lhs"),
                 F.lit(rhs).alias("rhs"), "n_rows", "n_lhs_groups",
                 "n_violations", "fd_strength", "holds_exactly",

@@ -8,8 +8,9 @@ The reference upserts one row per transaction into pgvector with
   local pipelines: union new rows with existing, keep the newest row per
   key. Atomic via write-to-staging + swap.
 - ``jdbc_upsert_writer`` — ``foreachPartition`` psycopg2 ``execute_values``
-  upsert (batched, reference page_size=100 at pgvector_storage.py:140),
-  import-gated so environments without psycopg2 still import this module.
+  upsert (paged, reference page_size=100 at pgvector_storage.py:140; one
+  row per key in a page), import-gated so environments without psycopg2
+  still import this module.
 
 Re-running a window is safe in both: at-least-once + keyed dedup =
 exactly-once-effective output (SURVEY.md §2.7) — the vector_id
@@ -18,6 +19,7 @@ exactly-once-effective output (SURVEY.md §2.7) — the vector_id
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import uuid
@@ -96,7 +98,14 @@ def jdbc_upsert_writer(
     page_size: int = 100,
 ):
     """Returns a foreachPartition function doing batched ON CONFLICT
-    upserts. Executor-side import of psycopg2 (gated)."""
+    upserts. Executor-side import of psycopg2 (gated).
+
+    The partition is read ``page_size`` distinct keys at a time, never
+    held whole. A key repeated within a page keeps its last occurrence:
+    Postgres rejects a statement that updates one row twice ("ON CONFLICT
+    DO UPDATE command cannot affect row a second time"). A repeat in a
+    later page is a later statement, so the last occurrence wins there
+    too."""
     non_keys = [c for c in all_cols if c not in key_cols]
     set_clause = ", ".join(f"{c} = EXCLUDED.{c}" for c in non_keys)
     sql = (
@@ -104,19 +113,32 @@ def jdbc_upsert_writer(
         f"ON CONFLICT ({', '.join(key_cols)}) DO UPDATE SET {set_clause}"
     )
 
+    def pages(rows):
+        page: dict[tuple, tuple] = {}
+        for r in rows:
+            key = tuple(getattr(r, c) for c in key_cols)
+            if key not in page and len(page) == page_size:
+                yield list(page.values())
+                page = {}
+            page[key] = tuple(getattr(r, c) for c in all_cols)
+        if page:
+            yield list(page.values())
+
     def write_partition(rows) -> None:
         try:
             import psycopg2
             from psycopg2.extras import execute_values
         except ImportError as e:  # pragma: no cover - env without psycopg2
             raise RuntimeError("jdbc_upsert_writer requires psycopg2 on executors") from e
-        batch = [tuple(getattr(r, c) for c in all_cols) for r in rows]
-        if not batch:
+        paged = pages(rows)
+        first = next(paged, None)
+        if first is None:
             return
         conn = psycopg2.connect(dsn)
         try:
             with conn.cursor() as cur:
-                execute_values(cur, sql, batch, page_size=page_size)
+                for page in itertools.chain([first], paged):
+                    execute_values(cur, sql, page, page_size=page_size)
             conn.commit()
         finally:
             conn.close()

@@ -85,3 +85,64 @@ def test_observed_upsert_tally(spark, tmp_path):
     assert tally == {"attempted": 3, "succeeded": 2, "failed": 1}
     stored = {r["id"] for r in spark.read.parquet(path).collect()}
     assert stored == {"a", "b"}
+
+
+def test_jdbc_upsert_writer_pages_and_keeps_last_per_key(monkeypatch):
+    """The partition goes out in ``page_size`` pages, read lazily, with
+    one row per key in a page (its last occurrence); one commit."""
+    import sys
+    import types
+
+    from pyspark.sql import Row
+
+    from quantum_rag_data_pipeline_spark.sinks.upsert import jdbc_upsert_writer
+
+    log = {"pages": [], "read_at_first_page": None, "commits": 0, "closed": False}
+    read = [0]
+
+    class Cursor:
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+    class Conn:
+        def cursor(self):
+            return Cursor()
+
+        def commit(self):
+            log["commits"] += 1
+
+        def close(self):
+            log["closed"] = True
+
+    def execute_values(cur, sql, page, page_size):
+        assert "ON CONFLICT (vector_id)" in sql and page_size == 3
+        if log["read_at_first_page"] is None:
+            log["read_at_first_page"] = read[0]
+        log["pages"].append(list(page))
+
+    psycopg2 = types.ModuleType("psycopg2")
+    psycopg2.connect = lambda dsn: Conn()
+    extras = types.ModuleType("psycopg2.extras")
+    extras.execute_values = execute_values
+    psycopg2.extras = extras
+    monkeypatch.setitem(sys.modules, "psycopg2", psycopg2)
+    monkeypatch.setitem(sys.modules, "psycopg2.extras", extras)
+
+    keys = ["a", "b", "a", "c", "a", "d", "e", "d", "f", "g"]
+
+    def rows():
+        for i, k in enumerate(keys):
+            read[0] += 1
+            yield Row(vector_id=k, v=i)
+
+    jdbc_upsert_writer("t", ["vector_id"], ["vector_id", "v"], "dsn", page_size=3)(rows())
+    assert log["pages"] == [
+        [("a", 4), ("b", 1), ("c", 3)],
+        [("d", 7), ("e", 6), ("f", 8)],
+        [("g", 9)],
+    ]
+    assert log["read_at_first_page"] == 6  # the 4th distinct key closes page one
+    assert log["commits"] == 1 and log["closed"]

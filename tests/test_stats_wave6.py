@@ -151,6 +151,31 @@ def test_fd_profile_exact_fd_on_nation(spark, sf_dir):
         assert r.holds_exactly == (r.n_violations == 0)
 
 
+def test_fd_profile_empty_table_emits_no_row(spark, sf_dir, tmp_path):
+    """An empty table contributes no candidate row, as in the oracle's
+    GROUP BY; the other candidates match the oracle."""
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from quantum_rag_data_pipeline_spark.queries import ORACLE
+
+    src = os.path.abspath(sf_dir)
+    for t in ("customer", "orders", "lineitem", "events"):
+        os.symlink(f"{src}/{t}.parquet", tmp_path / f"{t}.parquet")
+    pq.write_table(pq.read_table(f"{src}/nation.parquet").slice(0, 0),
+                   tmp_path / "nation.parquet")
+    got = sorted(tuple(r) for r in
+                 QUERIES["functional_dependency_profile"](spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    for t in ("nation", "customer", "orders", "lineitem", "events"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    want = sorted(con.execute(ORACLE["functional_dependency_profile"]).fetchall())
+    assert [r[0] for r in got] == ["customer", "events", "lineitem", "orders"]
+    assert got == want
+
+
 def test_elasticity_r2_bounded(spark, sf_dir):
     r = QUERIES["price_elasticity_loglog"](spark, sf_dir).first()
     assert 0.0 <= r.r_squared <= 1.0 + 1e-9
