@@ -1,6 +1,6 @@
 """Vector similarity search over an ``array<float>`` embedding column.
 
-Two paths:
+Query-vs-corpus paths:
 - ``brute_force_topk`` — exact cosine top-k. The query side is broadcast
   (queries are always the small side), so the corpus is scanned once with
   NO shuffle of the vectors; per-partition heaps via TakeOrderedAndProject
@@ -11,10 +11,21 @@ Two paths:
   both sides; only same-bucket candidates are scored. At 100 TB this
   turns the cross product into a co-partitioned equi-join on bucket id.
   Probing multiple hash tables recovers recall.
+- ``ivf_topk`` — exact search within the probed centroid lists.
+
+All-pairs operators (exact near-dup, the kNN graph and its incremental
+update) share ONE block-pair pipeline: ``_block_members`` hashes rows
+into B blocks and joins them onto a broadcast block-pair grid (self or
+cross, namespaced by a segment id so several grids can share a pass),
+and ``_score_blocks`` is the one grouped-map kernel. Each group is one
+BLAS gram slice on an executor, in threshold or top-keep mode, and every
+pair it emits carries its exact sequential cosine, so no vectors ride a
+rescore join.
 
 Cosine math is ``zip_with`` + ``aggregate`` fold — sequential, JVM-side,
 deterministic (bit-identical across partitionings, which the DuckDB
-oracle comparison depends on).
+oracle comparison depends on); the kernel's ``_seq_cos`` replays the
+same op sequence in numpy.
 """
 
 from __future__ import annotations
@@ -268,107 +279,42 @@ def _block_grid(spark, B: int, full: bool = False) -> DataFrame:
     return g if full else g.filter(F.col("bx") <= F.col("by"))
 
 
-def embedding_near_dup_pairs_fast(
-    df: DataFrame,
-    dim: int,
+def _block_members(
+    B: int,
+    left: DataFrame,
+    right: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    threshold: float = 0.9,
-    margin: float = 1e-6,
-    n_blocks: int | None = None,
+    seg: int = 0,
 ) -> DataFrame:
-    """Exact near-dup: DISTRIBUTED block-pair matmul PREFILTER + exact RESCORE.
+    """Group membership of one block-pair grid: rows
+    ``(_seg, pid, _side, _id, _vec)``. Rows hash into B blocks by
+    ``pmod(xxhash64(id), B)`` and join the broadcast ``_block_grid``.
 
-    Rows hash into B blocks; every unordered block pair (x ≤ y) becomes one
-    ``applyInPandas`` group whose gram-matrix slice is a single BLAS call on
-    an executor. Each row is shuffled to B groups (volume n·B vectors) and
-    each unordered ROW pair lands in exactly one group — exact coverage,
-    nothing ever collected to the driver. Stage 2 recomputes the candidates'
-    cosine with the sequential index-fold dot and applies the true threshold,
-    so output VALUES are bit-identical to the brute-force operator (matmul
-    reordering only affects which pairs reach stage 2; ``margin`` absorbs
-    its ~1e-12 error).
+    - Self grid (``right`` None): the unordered block pairs bx ≤ by.
+      Side "a" sits at bx; side "b" sits at by for bx <> by. Each row is
+      shuffled to B groups (volume n·B vectors) and each unordered ROW
+      pair lands in exactly one group; a diagonal group (bx = by) holds
+      its block once, on side "a".
+    - Cross grid: the full B×B grid, ``left`` rows on side "a" at bx and
+      ``right`` rows on side "b" at by, so each (left, right) row pair
+      lands in exactly one group. Ids must be disjoint across the sides.
 
-    B defaults to ``_auto_blocks``: the parallelism target
-    sqrt(2·shuffle_partitions), capped so blocks stay BLAS-sized on
-    small corpora and floored so a block pair fits executor memory at
-    scale (the count() is a table-stat lookup in production). Exact
-    all-pairs is O(n²) on any engine — at 100 TB use LSH/cluster blocking
-    (``embedding_near_dup_pairs(block_col=...)``); this is the exact path
-    for corpora whose n²·d flops are budgeted."""
-    import numpy as np
+    ``seg`` namespaces the grid: members of several grids unioned
+    together are scored in ONE ``_score_blocks`` pass."""
+    grid = _block_grid(left.sparkSession, B, full=right is not None)
 
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    B = n_blocks or _auto_blocks(df.count(), n_part)
-    thr = threshold - margin
+    def side(df: DataFrame, name: str, g: DataFrame, at: str) -> DataFrame:
+        rows = df.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
+        )
+        return rows.join(F.broadcast(g), rows["_blk"] == g[at]).select(
+            F.lit(seg).alias("_seg"), "pid", F.lit(name).alias("_side"), "_id", "_vec")
 
-    rows = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
-    )
-    pair_df = _block_grid(spark, B)
-    mem_a = rows.join(F.broadcast(pair_df), rows["_blk"] == pair_df["bx"]) \
-        .select("pid", F.lit("a").alias("_side"), "_id", "_vec")
-    mem_b = rows.join(F.broadcast(pair_df.filter("bx <> by")), rows["_blk"] == pair_df["by"]) \
-        .select("pid", F.lit("b").alias("_side"), "_id", "_vec")
-    mem = mem_a.unionByName(mem_b)
-
-    def find_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()
-        empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"), "id_b": pd.Series(dtype="int64")})
-        a = pdf[pdf["_side"] == "a"]
-        b = pdf[pdf["_side"] == "b"]
-        if len(a) == 0:
-            return empty
-        ids_a = a["_id"].to_numpy(dtype=np.int64)
-        A = np.stack(a["_vec"].to_numpy()).astype(np.float64)
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        # CHUNKed gram slices, same rationale as _chunked_pair_topk:
-        # the full block-pair gram (+ its boolean mask + np.triu's
-        # second full-size temp) is fresh RSS the worker re-faults at
-        # ~20 MB/s on this rig; 1024-row slices keep temps repeated-size
-        # so allocation reaches steady state after one slice. Emitted
-        # pair SETS are identical (thresholding is per-element).
-        las, lbs = [], []
-        # diagonality from the GROUP ID, not len(b) (round 15 hardening,
-        # same as find_candidates): a cross group whose by-block is empty
-        # must emit nothing, not re-run the diagonal kernel (which would
-        # duplicate that block's within-pairs in the output).
-        pid = int(pdf["pid"].iloc[0])
-        if pid // B != pid % B and len(b) == 0:
-            return empty
-        if len(b):  # cross-block pair (x < y): a-side × b-side only
-            ids_b = b["_id"].to_numpy(dtype=np.int64)
-            Bm = np.stack(b["_vec"].to_numpy()).astype(np.float64)
-            Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-            for off in range(0, An.shape[0], 1024):
-                ii, jj = np.nonzero(An[off:off + 1024] @ Bn.T >= thr)
-                las.append(ids_a[ii + off])
-                lbs.append(ids_b[jj])
-        else:  # diagonal pair (x, x): upper triangle of the block's gram
-            for off in range(0, An.shape[0], 1024):
-                ii, jj = np.nonzero(An[off:off + 1024] @ An.T >= thr)
-                up = jj > ii + off
-                las.append(ids_a[ii[up] + off])
-                lbs.append(ids_a[jj[up]])
-        if not las or not (la := np.concatenate(las)).size:
-            return empty
-        lb = np.concatenate(lbs)
-        return pd.DataFrame({"id_a": np.minimum(la, lb), "id_b": np.maximum(la, lb)})
-
-    cand = mem.groupBy("pid").applyInPandas(find_pairs, "id_a long, id_b long")
-    vecs = df.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col), dim).alias("_n"))
-    a = vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), F.col("_n").alias("n_a"))
-    b = vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), F.col("_n").alias("n_b"))
-    return (
-        cand.join(a, "id_a").join(b, "id_b")
-        .withColumn("cos_sim", dot(F.col("vec_a"), F.col("vec_b"), dim) / (F.col("n_a") * F.col("n_b")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    b_grid = grid if right is not None else grid.filter("bx <> by")
+    return side(left, "a", grid, "bx").unionByName(
+        side(left if right is None else right, "b", b_grid, "by"))
 
 
 def _seq_norms(V: "np.ndarray", dim: int) -> "np.ndarray":
@@ -478,6 +424,150 @@ def _chunked_pair_topk(An: "np.ndarray", Bn: "np.ndarray", keep: int,
     return ra, ca, rb, cb
 
 
+def _chunked_pair_threshold(An: "np.ndarray", Bn: "np.ndarray", thr: float,
+                            diagonal: bool, chunk: int = 1024):
+    """(rows, cols) index pairs into An/Bn whose gram entry is ≥ ``thr``;
+    a diagonal group (Bn is An) keeps the upper triangle only. CHUNKed
+    gram slices, same rationale as ``_chunked_pair_topk``: the full
+    block-pair gram (+ its boolean mask + an upper-triangle copy) is
+    fresh RSS the worker re-faults at ~20 MB/s per core; 1024-row slices
+    keep temps repeated-size so allocation reaches steady state after
+    one slice. Emitted pair SETS are identical (thresholding is
+    per-element)."""
+    import numpy as np
+
+    rows, cols = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for off in range(0, An.shape[0], chunk):
+        ii, jj = np.nonzero(An[off:off + chunk] @ Bn.T >= thr)
+        if diagonal:
+            up = jj > ii + off
+            ii, jj = ii[up], jj[up]
+        rows.append(ii + off)
+        cols.append(jj)
+    return np.concatenate(rows), np.concatenate(cols)
+
+
+def _score_blocks(
+    members: DataFrame,
+    grids: dict[int, tuple[int, bool]],
+    dim: int | None,
+    keep: int | None = None,
+    threshold: float | None = None,
+    margin: float = 0.0,
+) -> DataFrame:
+    """THE block-pair kernel: one ``groupBy("_seg", "pid")
+    .applyInPandas`` over ``_block_members`` rows, emitting scored pairs
+    ``(src, dst, cos_sim)``. Each group's gram slice is BLAS on an
+    executor, nothing is collected to the driver, and every emitted
+    pair carries its EXACT sequential cosine computed in the same
+    worker (``_seq_cos`` — bit-identical to the plan-side
+    ``dot/(norm·norm)`` fold). Round 11 moved scoring in-pass: a rescore
+    stage that joined every candidate against the vector table twice
+    attached 512-byte vectors to ~n·B·keep rows — ~100 GB of shuffle and
+    a measured 20.9x third-decade exponent; in-worker scoring ships only
+    (src, dst, cos_sim).
+
+    ``grids[_seg] = (B, cross)``. A group is diagonal (one block against
+    itself, self pairs excluded) only when ``not cross and pid // B ==
+    pid % B``. Diagonality comes from the GROUP ID, never from an empty
+    b side (round 15 hardening): running the diagonal kernel on a
+    self-grid cross group whose by-block is empty would emit that
+    bx-block's within-pairs a second time and corrupt the downstream
+    ranks. Empty blocks are unreachable with ``_auto_blocks`` sizing
+    (blocks carry ≥ ~512 expected rows), but an explicit small
+    ``n_blocks`` with a skewed corpus hits them.
+
+    Modes (exactly one of ``keep`` / ``threshold``):
+    - top-keep: each a row keeps its top-``keep`` b rows by matmul
+      score, and in non-diagonal groups each b row its top-``keep`` a
+      rows (``_chunked_pair_topk``); callers rank with ``_knn_topk``.
+    - threshold: a chunked gram prefilter at ``threshold - margin``
+      (``margin`` absorbs the matmul's ~1e-12 reordering error, so it
+      only decides which pairs get an exact score), then pairs with
+      exact ``cos >= threshold`` are kept as (min id, max id)."""
+    import numpy as np
+
+    empty = pd.DataFrame({"src": pd.Series(dtype="int64"),
+                          "dst": pd.Series(dtype="int64"),
+                          "cos_sim": pd.Series(dtype="float64")})
+
+    def unpack(side: pd.DataFrame):
+        ids = side["_id"].to_numpy(dtype=np.int64)
+        V = np.stack(side["_vec"].to_numpy()).astype(np.float64)
+        return ids, V, V / np.linalg.norm(V, axis=1, keepdims=True)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        from quantum_rag_data_pipeline_spark.operators.alloctune import \
+            tune_worker_allocator
+        tune_worker_allocator()  # the kept-pair gathers are varied-size
+        B, cross = grids[int(pdf["_seg"].iloc[0])]
+        pid = int(pdf["pid"].iloc[0])
+        diagonal = not cross and pid // B == pid % B
+        a = pdf[pdf["_side"] == "a"]
+        b = pdf[pdf["_side"] == "b"]
+        if len(a) == 0 or (not diagonal and len(b) == 0):
+            return empty
+        ids_a, A, An = unpack(a)
+        ids_b, Bm, Bn = (ids_a, A, An) if diagonal else unpack(b)
+        d_eff = dim if dim is not None else A.shape[1]
+        na = _seq_norms(A, d_eff)
+        nb = na if diagonal else _seq_norms(Bm, d_eff)
+        i2 = j2 = np.empty(0, np.int64)  # b→a pairs: top-keep cross groups only
+        if threshold is not None:
+            i1, j1 = _chunked_pair_threshold(An, Bn, threshold - margin, diagonal)
+        elif diagonal:
+            i1, j1 = _chunked_pair_topk(An, Bn, keep, diagonal=True)
+        else:
+            i1, j1, i2, j2 = _chunked_pair_topk(An, Bn, keep, diagonal=False)
+        src = np.concatenate([ids_a[i1], ids_b[i2]])
+        dst = np.concatenate([ids_b[j1], ids_a[j2]])
+        cos = np.concatenate([_seq_cos(A, Bm, i1, j1, na, nb, d_eff),
+                              _seq_cos(Bm, A, i2, j2, nb, na, d_eff)])
+        if threshold is not None:
+            hit = cos >= threshold
+            src, dst, cos = src[hit], dst[hit], cos[hit]
+            src, dst = np.minimum(src, dst), np.maximum(src, dst)
+        return pd.DataFrame({"src": src, "dst": dst, "cos_sim": cos})
+
+    return members.groupBy("_seg", "pid").applyInPandas(
+        kernel, "src long, dst long, cos_sim double")
+
+
+def embedding_near_dup_pairs_fast(
+    df: DataFrame,
+    dim: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.9,
+    margin: float = 1e-6,
+    n_blocks: int | None = None,
+) -> DataFrame:
+    """Exact near-dup: DISTRIBUTED block-pair matmul PREFILTER + exact
+    in-worker SCORE, one ``_score_blocks`` pass in threshold mode over a
+    self grid (``_block_members``).
+
+    Each unordered row pair lands in exactly one group, so coverage is
+    exact. Candidates from the gram slice at ``threshold - margin`` are
+    rescored with ``_seq_cos`` in the same worker and cut at the true
+    threshold, so output VALUES are bit-identical to the brute-force
+    operator (matmul reordering only affects which pairs get an exact
+    score; ``margin`` absorbs its ~1e-12 error).
+
+    B defaults to ``_auto_blocks``: the parallelism target
+    sqrt(2·shuffle_partitions), capped so blocks stay BLAS-sized on
+    small corpora and floored so a block pair fits executor memory at
+    scale (the count() is a table-stat lookup in production). Exact
+    all-pairs is O(n²) on any engine — at 100 TB use LSH/cluster blocking
+    (``embedding_near_dup_pairs(block_col=...)``); this is the exact path
+    for corpora whose n²·d flops are budgeted."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    B = n_blocks or _auto_blocks(df.count(), n_part)
+    pairs = _score_blocks(_block_members(B, df, id_col=id_col, vec_col=vec_col),
+                          {0: (B, False)}, dim, threshold=threshold, margin=margin)
+    return pairs.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"),
+                        F.round("cos_sim", 6).alias("cos_sim"))
+
+
 def knn_graph(
     df: DataFrame,
     k: int = 5,
@@ -498,9 +588,9 @@ def knn_graph(
     group every node keeps only its top ``k+pad`` candidates by matmul
     score (pad absorbs the ~1e-12 matmul-vs-sequential reordering error
     at the k boundary), so the candidate shuffle carries n·B·(k+pad)
-    ids — never vectors, never n². Candidates are then RESCORED with the
-    sequential index-fold dot and re-ranked globally, making the emitted
-    scores and ranks bit-identical to a brute-force oracle."""
+    scored ids — never vectors, never n². Each candidate carries its
+    exact sequential cosine and the global re-rank uses it, making the
+    emitted scores and ranks bit-identical to a brute-force oracle."""
     return _knn_topk(knn_candidates(df, k + pad, id_col, vec_col,
                                     n_blocks, dim), k)
 
@@ -516,81 +606,14 @@ def knn_candidates(
     """Within-set SCORED candidate generation for the kNN graph: per
     node the top ``keep`` neighbors by matmul cosine from each
     block-pair BLAS slice (each node pair meets in exactly one slice),
-    each kept pair carrying its EXACT sequential cosine computed in the
-    same worker (``_seq_cos`` — bit-identical to the plan-side
-    ``dot/(norm·norm)`` fold). Round 11 moved scoring in-pass: the old
-    ``_rescore`` stage joined every candidate row against the vector
-    table twice, attaching 512-byte vectors to ~n·B·keep rows — ~100 GB
-    of shuffle and a measured 20.9x third-decade exponent; in-worker
-    scoring ships only (src, dst, cos_sim). Callers rank with
-    ``_knn_topk``. B defaults to the data-aware ``_auto_blocks`` (see
-    its docstring for the exactness argument)."""
-    import numpy as np
-
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    each kept pair carrying its EXACT sequential cosine — one
+    ``_score_blocks`` pass in top-keep mode over a self grid. Callers
+    rank with ``_knn_topk``. B defaults to the data-aware
+    ``_auto_blocks`` (see its docstring for the exactness argument)."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     B = n_blocks or _auto_blocks(df.count(), n_part)
-
-    rows = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
-    )
-    pair_df = _block_grid(spark, B)
-    mem_a = rows.join(F.broadcast(pair_df), rows["_blk"] == pair_df["bx"]) \
-        .select("pid", F.lit("a").alias("_side"), "_id", "_vec")
-    mem_b = rows.join(F.broadcast(pair_df.filter("bx <> by")), rows["_blk"] == pair_df["by"]) \
-        .select("pid", F.lit("b").alias("_side"), "_id", "_vec")
-    mem = mem_a.unionByName(mem_b)
-
-    def find_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()  # the kept-pair gathers are varied-size
-        empty = pd.DataFrame({"src": pd.Series(dtype="int64"),
-                              "dst": pd.Series(dtype="int64"),
-                              "cos_sim": pd.Series(dtype="float64")})
-        a = pdf[pdf["_side"] == "a"]
-        b = pdf[pdf["_side"] == "b"]
-        if len(a) == 0:
-            return empty
-        ids_a = a["_id"].to_numpy(dtype=np.int64)
-        A = np.stack(a["_vec"].to_numpy()).astype(np.float64)
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        d_eff = dim if dim is not None else A.shape[1]
-        na = _seq_norms(A, d_eff)
-
-        # Diagonality comes from the GROUP ID, not from len(b) (round 15
-        # hardening): pid = bx*B + by, so bx == by identifies the
-        # within-block group structurally. The old len(b)==0 inference
-        # silently re-ran the diagonal kernel for a CROSS group whose
-        # by-block happened to be empty — emitting that bx-block's
-        # within-pairs a second time and corrupting the downstream
-        # row_number ranks. Unreachable with _auto_blocks sizing (blocks
-        # carry ≥ ~512 expected rows), but an explicit small n_blocks
-        # with a skewed corpus could hit it.
-        pid = int(pdf["pid"].iloc[0])
-        if pid // B != pid % B:  # cross group
-            if len(b) == 0:
-                return empty
-            ids_b = b["_id"].to_numpy(dtype=np.int64)
-            Bm = np.stack(b["_vec"].to_numpy()).astype(np.float64)
-            Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-            nb = _seq_norms(Bm, d_eff)
-            i1, j1, i2, j2 = _chunked_pair_topk(An, Bn, keep, diagonal=False)
-            src = np.concatenate([ids_a[i1], ids_b[i2]])
-            dst = np.concatenate([ids_b[j1], ids_a[j2]])
-            cos = np.concatenate([_seq_cos(A, Bm, i1, j1, na, nb, d_eff),
-                                  _seq_cos(Bm, A, i2, j2, nb, na, d_eff)])
-        else:  # diagonal: within-block, self excluded
-            ii, jj = _chunked_pair_topk(An, An, keep, diagonal=True)
-            src, dst = ids_a[ii], ids_a[jj]
-            cos = _seq_cos(A, A, ii, jj, na, na, d_eff)
-        if len(src) == 0:
-            return empty
-        return pd.DataFrame({"src": src, "dst": dst, "cos_sim": cos})
-
-    return mem.groupBy("pid").applyInPandas(
-        find_candidates, "src long, dst long, cos_sim double")
+    return _score_blocks(_block_members(B, df, id_col=id_col, vec_col=vec_col),
+                         {0: (B, False)}, dim, keep=keep)
 
 
 def _knn_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -605,82 +628,6 @@ def _knn_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cross_topk_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    keep: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """Blocked cross-set SCORED candidate generation: per LEFT row the
-    top ``keep`` RIGHT rows by matmul cosine, and per RIGHT row the top
-    ``keep`` LEFT rows — both directions from ONE pass over the
-    B_L×B_R block-pair grid (each cross row pair is scored in exactly
-    one BLAS slice), each kept pair carrying its exact sequential
-    cosine (``_seq_cos``, bit-identical to the plan-side fold — see
-    ``knn_candidates`` for why scoring moved in-pass). The shuffle
-    carries (|L|+|R|)·B·keep scored id pairs, never vectors. Ids must
-    be disjoint across the two sides. B defaults to ``_auto_blocks`` on
-    the LARGER side (the B×B grid's per-group cost is bounded by the
-    bigger block)."""
-    import numpy as np
-
-    spark = left.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    B = n_blocks or _auto_blocks(max(left.count(), right.count()), n_part)
-
-    def tagged(df: DataFrame, side: str) -> DataFrame:
-        return df.select(
-            F.lit(side).alias("_side"),
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
-        )
-
-    grid = _block_grid(spark, B, full=True)
-    lrows, rrows = tagged(left, "a"), tagged(right, "b")
-    mem = (
-        lrows.join(F.broadcast(grid), lrows["_blk"] == grid["bx"])
-        .select("pid", "_side", "_id", "_vec")
-        .unionByName(
-            rrows.join(F.broadcast(grid), rrows["_blk"] == grid["by"])
-            .select("pid", "_side", "_id", "_vec")
-        )
-    )
-
-    def find(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()  # the kept-pair gathers are varied-size
-        empty = pd.DataFrame({"src": pd.Series(dtype="int64"),
-                              "dst": pd.Series(dtype="int64"),
-                              "cos_sim": pd.Series(dtype="float64")})
-        a = pdf[pdf["_side"] == "a"]
-        b = pdf[pdf["_side"] == "b"]
-        if len(a) == 0 or len(b) == 0:
-            return empty
-        ids_a = a["_id"].to_numpy(dtype=np.int64)
-        ids_b = b["_id"].to_numpy(dtype=np.int64)
-        A = np.stack(a["_vec"].to_numpy()).astype(np.float64)
-        Bm = np.stack(b["_vec"].to_numpy()).astype(np.float64)
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-        d_eff = dim if dim is not None else A.shape[1]
-        na, nb = _seq_norms(A, d_eff), _seq_norms(Bm, d_eff)
-        i1, j1, i2, j2 = _chunked_pair_topk(An, Bn, keep, diagonal=False)
-        return pd.DataFrame({
-            "src": np.concatenate([ids_a[i1], ids_b[i2]]),
-            "dst": np.concatenate([ids_b[j1], ids_a[j2]]),
-            "cos_sim": np.concatenate([
-                _seq_cos(A, Bm, i1, j1, na, nb, d_eff),
-                _seq_cos(Bm, A, i2, j2, nb, na, d_eff)]),
-        })
-
-    return mem.groupBy("pid").applyInPandas(
-        find, "src long, dst long, cos_sim double")
-
-
 def knn_graph_incremental(
     old_df: DataFrame,
     new_df: DataFrame,
@@ -691,28 +638,29 @@ def knn_graph_incremental(
     pad: int = 8,
 ) -> DataFrame:
     """INCREMENTAL k-NN graph maintenance: given the existing corpus and
-    a newly ingested batch, produce the full-corpus k-NN graph WITHOUT
-    re-scoring old×old pairs — the index-update path a vector store
-    runs on every ingest. Work is O(old·k) (stored edges re-ranked) +
-    one old×new cross pass + one new×new pass, vs O(n²) for a rebuild;
-    at 100 TB with a 1% daily batch that is a ~99% flop reduction.
+    a newly ingested batch, produce the full-corpus k-NN graph — the
+    index-update path a vector store runs on every ingest. The fresh
+    work is one old×new cross grid (both directions) + one new×new self
+    grid, vs O(n²) for a rebuild; at 100 TB with a 1% daily batch that
+    is a ~99% flop reduction. In production the old×old edges are READ
+    from the index store; the demo rebuilds them as a third grid so the
+    parity query is self-contained.
 
-    Correctness argument (verified by the parity query): an old node's
-    updated top-k ⊆ its previous top-k ∪ its top-(k+pad) among NEW
-    vectors; a new node's top-k ⊆ its per-side top-(k+pad) against old
-    and new. All candidates funnel through the same exact-rescore tail
-    as the batch build, so the result is bit-identical to
-    ``knn_graph(old ∪ new)``."""
-    keep = k + pad
-    # The stored index: old-graph top-k edges with their exact scores. In
-    # production these are READ from the index store; the demo rebuilds
-    # them so the parity query is self-contained. Scores stay unrounded
-    # so stored and fresh edges rank on the same exact values.
+    All three grids are namespaced segments of ONE ``_score_blocks``
+    pass (one shuffle, one Python stage). Its output has exactly one
+    consumer: filtering it into a "stored" and a "fresh" branch would
+    make Spark run the Python stage twice. Ranking all of it once with
+    ``_knn_topk`` is exact — every candidate carries its exact score,
+    and each node's top-k lies in its per-group top-(k+pad) (an old
+    node's updated top-k ⊆ its old top-(k+pad) ∪ its top-(k+pad) among
+    NEW vectors; a new node's ⊆ its per-side top-(k+pad) against old
+    and new) — so the result is bit-identical to
+    ``knn_graph(old ∪ new)`` (verified by the parity query)."""
     # Block counts come from _auto_blocks (data-aware), but computed HERE
-    # and passed down explicitly: the three candidate stages (old, cross,
-    # new) would otherwise each count() their caller-supplied inputs —
-    # up to 4 executions of possibly expensive derived plans per call.
-    # One count per side funds all three stages.
+    # and passed down explicitly: the three grids would otherwise each
+    # count() their caller-supplied inputs — up to 4 executions of
+    # possibly expensive derived plans per call. One count per side
+    # funds all three grids.
     n_part = int(old_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # ONE job for both side counts (round 14): the two .count() calls were
     # two job submissions, each a separate pass over its side; a tagged
@@ -731,23 +679,15 @@ def knn_graph_incremental(
     b_old = _auto_blocks(n_old, n_part)
     b_new = _auto_blocks(n_new, n_part)
     b_cross = _auto_blocks(max(n_old, n_new), n_part)
-    old_scored = knn_candidates(old_df, keep, id_col, vec_col,
-                                n_blocks=b_old, dim=dim)
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
-    stored = (
-        old_scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k).select("src", "dst", "cos_sim")
+    # Segments are pairwise disjoint (old->old vs old->new and new->old
+    # vs new->new), so the union needs no dedup before the final top-k.
+    members = (
+        _block_members(b_old, old_df, None, id_col, vec_col, seg=0)
+        .unionByName(_block_members(b_cross, old_df, new_df, id_col, vec_col, seg=1))
+        .unionByName(_block_members(b_new, new_df, None, id_col, vec_col, seg=2))
     )
-    # Fresh work — the only scoring the incremental update pays for:
-    # old×new both directions + new×new, each pair scored exactly in
-    # the worker that computed its gram slice (see knn_candidates).
-    fresh_scored = cross_topk_candidates(old_df, new_df, keep, id_col, vec_col,
-                                         n_blocks=b_cross, dim=dim) \
-        .unionByName(knn_candidates(new_df, keep, id_col, vec_col,
-                                    n_blocks=b_new, dim=dim))
-    # Branches are pairwise disjoint (old->old vs old->new vs new->old vs
-    # new->new), so the union needs no dedup before the final top-k.
-    return _knn_topk(stored.unionByName(fresh_scored), k)
+    grids = {0: (b_old, False), 1: (b_cross, True), 2: (b_new, False)}
+    return _knn_topk(_score_blocks(members, grids, dim, keep=k + pad), k)
 
 
 def embedding_near_dup_pairs(

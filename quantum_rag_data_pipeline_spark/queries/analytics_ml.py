@@ -716,8 +716,9 @@ def knn_graph_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental index maintenance == batch rebuild, proven at the
     gate: the corpus is split into an existing index (vec_id % 5 ≠ 0)
     and a newly ingested 20% batch, the graph is updated INCREMENTALLY
-    (stored old edges re-ranked against one old×new cross pass + one
-    new×new pass — no old×old rescoring), and the oracle is the full
+    (old edges re-ranked against an old×new cross grid + a new×new
+    grid, all scored in one grouped-map pass; a production store reads
+    the old edges instead of rebuilding them), and the oracle is the full
     O(n²) batch answer. This is the daily-ingest path of a production
     vector store: at a 1% batch rate the incremental update does ~1% of
     the rebuild's flops, and this query pins that shortcut to exact

@@ -6,7 +6,12 @@ The reference upserts one row per transaction into pgvector with
 
 - ``parquet_upsert`` — file-backed MERGE-equivalent used by tests and
   local pipelines: union new rows with existing, keep the newest row per
-  key. Atomic via write-to-staging + swap.
+  key. The merge is written to a staging directory first; the swap
+  renames the live table aside, moves staging in and only then deletes
+  the aside copy, so a failure at any step leaves a readable table (the
+  next upsert restores an aside left by a crash). Two renames are not
+  one atomic step, and concurrent upserts to one path are not
+  supported.
 - ``jdbc_upsert_writer`` — ``foreachPartition`` psycopg2 ``execute_values``
   upsert (paged, reference page_size=100 at pgvector_storage.py:140; one
   row per key in a page), import-gated so environments without psycopg2
@@ -39,6 +44,14 @@ def parquet_upsert(
     """MERGE-equivalent over a parquet table: newest row per key wins.
     ``version_col`` (e.g. updated_at) breaks ties; new rows outrank
     existing rows at equal versions."""
+    aside = f"{path}.aside"
+    if os.path.exists(aside):
+        # left by a crash mid-swap: beside a table the move-in completed
+        # and the aside is the superseded copy; alone, it is the table
+        if os.path.exists(path):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, path)
     new_rows = new_rows.withColumn("_src_rank", F.lit(1))
     if os.path.exists(path):
         existing = spark.read.parquet(path).withColumn("_src_rank", F.lit(0))
@@ -54,9 +67,18 @@ def parquet_upsert(
     )
     staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
     deduped.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
+    had_table = os.path.exists(path)
+    if had_table:
+        os.rename(path, aside)
+    try:
+        os.rename(staging, path)
+    except BaseException:
+        if had_table:
+            os.rename(aside, path)
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if had_table:
+        shutil.rmtree(aside)
     # the session caches parquet file listings per path; the swap above
     # invalidated them
     spark.catalog.refreshByPath(path)

@@ -545,14 +545,15 @@ def test_connected_components_local_vs_distributed_parity(spark):
     assert local == dist and len(local) > 0
 
 
-def test_knn_graph_exact_with_forced_empty_blocks(spark):
+def test_knn_graph_exact_with_forced_empty_blocks(spark, monkeypatch):
     """Group-mode dispatch must come from the pid, not from len(b)
     (round-15 hardening): with n_blocks forced far above the row count,
     most blocks are EMPTY and cross groups (x, y) with an empty y-block
     arrive b-less — the old inference re-ran the diagonal kernel there
     and duplicated block-x's within-pairs, corrupting the ranks. Pin
-    knn_graph against brute force across block counts that guarantee
-    empty blocks."""
+    knn_graph, the threshold-mode near-dup and the incremental update
+    (empty and one-row sides included) against brute force across block
+    counts that guarantee empty blocks."""
     import random
 
     import numpy as np
@@ -571,10 +572,64 @@ def test_knn_graph_exact_with_forced_empty_blocks(spark):
         order = sorted((-(G[i, j]), ids[j]) for j in range(12) if j != i)[:3]
         for rnk, (_negc, j) in enumerate(order, 1):
             exp.add((ids[i], j, rnk))
+    graphs = {}
     for B in (5, 8):  # 12 rows into 5/8 blocks -> empty blocks guaranteed-ish
-        out = sim.knn_graph(df, k=3, dim=8, n_blocks=B)
-        got = {(r["src"], r["dst"], r["rnk"]) for r in out.collect()}
+        graphs[B] = {tuple(r) for r in sim.knn_graph(df, k=3, dim=8, n_blocks=B).collect()}
+        got = {(s, d, rk) for s, d, _c, rk in graphs[B]}
         assert got == exp, f"B={B}: {sorted(got ^ exp)[:6]}"
+
+    # threshold mode over the same blocks: equal to the brute-force pairs
+    want = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
+            sim.embedding_near_dup_pairs(df, threshold=0.8, dim=8).collect()}
+    assert want
+    for B in (5, 8):
+        fast = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
+                sim.embedding_near_dup_pairs_fast(df, dim=8, threshold=0.8,
+                                                  n_blocks=B).collect()}
+        assert fast == want, f"B={B}: {sorted(set(fast) ^ set(want))[:6]}"
+
+    # incremental update == batch graph of old ∪ new, with every grid
+    # (old self, old×new cross, new self) forced to B blocks
+    none = df.filter("vec_id < 0")
+    splits = {"empty new": (df, none), "empty old": (none, df),
+              "one-row new": (df.filter("vec_id < 11"), df.filter("vec_id = 11"))}
+    for B, batch in graphs.items():
+        monkeypatch.setattr(sim, "_auto_blocks", lambda n_rows, n_part, _B=B: _B)
+        for name, (old, new) in splits.items():
+            inc = {tuple(r) for r in
+                   sim.knn_graph_incremental(old, new, k=3, dim=8).collect()}
+            assert inc == batch, f"B={B} {name}: {sorted(inc ^ batch)[:6]}"
+
+
+def test_block_pair_operators_run_one_python_stage(spark):
+    """Every block-pair operator is ONE grouped-map pass: the formatted
+    plan of knn_graph, embedding_near_dup_pairs_fast and
+    knn_graph_incremental (three grids, one kernel) carries exactly one
+    FlatMapGroupsInPandas. A second one means a grid got its own pass,
+    or the kernel output gained a second consumer (Spark re-runs the
+    Python stage per consumer)."""
+    import contextlib
+    import io
+    import re
+
+    from quantum_rag_data_pipeline_spark.operators import similarity as sim
+
+    rows = [(i, [float((i * 7 + j) % 5 + 1) for j in range(8)]) for i in range(12)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    plans = {
+        "knn_graph": sim.knn_graph(df, k=3, dim=8, n_blocks=3),
+        "embedding_near_dup_pairs_fast": sim.embedding_near_dup_pairs_fast(
+            df, dim=8, threshold=0.8, n_blocks=3),
+        "knn_graph_incremental": sim.knn_graph_incremental(
+            df.filter("vec_id % 4 <> 0"), df.filter("vec_id % 4 = 0"), k=3, dim=8),
+    }
+    for name, out in plans.items():
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain("formatted")
+        plan = buf.getvalue()
+        n = len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M))
+        assert n == 1, f"{name}: {n} grouped-map stages\n{plan}"
 
 
 def test_connected_components_empty_edge_list(spark):

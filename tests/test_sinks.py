@@ -25,6 +25,49 @@ def test_parquet_upsert_same_version_prefers_new(spark, tmp_path):
     assert spark.read.parquet(path).collect()[0]["v"] == "b"
 
 
+def test_parquet_upsert_failed_swap_keeps_table(spark, tmp_path, monkeypatch):
+    """A failure while moving the merged staging copy into place must
+    leave the old table readable (deleting it first lost it)."""
+    import os
+
+    import pytest
+
+    path = str(tmp_path / "t")
+    schema = "id string, v string, ver int"
+    parquet_upsert(spark, spark.createDataFrame([("k1", "old", 1), ("k2", "keep", 1)], schema),
+                   path, ["id"], version_col="ver")
+    real_rename = os.rename
+
+    def failing_rename(src, dst):
+        if ".staging-" in str(src):
+            raise OSError("injected: staging move failed")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        parquet_upsert(spark, spark.createDataFrame([("k1", "new", 2)], schema),
+                       path, ["id"], version_col="ver")
+    monkeypatch.undo()
+    spark.catalog.refreshByPath(path)
+    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {"k1": "old", "k2": "keep"}
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no aside or staging left
+
+
+def test_parquet_upsert_restores_leftover_aside(spark, tmp_path):
+    """A crash between renaming the live table aside and moving staging
+    in leaves only the aside copy; the next upsert must merge into it,
+    not start a fresh table."""
+    path = str(tmp_path / "t")
+    schema = "id string, v string, ver int"
+    spark.createDataFrame([("k1", "old", 1), ("k2", "keep", 1)], schema) \
+        .write.parquet(f"{path}.aside")
+    parquet_upsert(spark, spark.createDataFrame([("k1", "new", 2)], schema),
+                   path, ["id"], version_col="ver")
+    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {"k1": "new", "k2": "keep"}
+
+
 KV_SCHEMA = (
     "dataId string, description string, "
     "efficiency struct<value: string, unit: string>, "
