@@ -46,6 +46,8 @@ HEADLINE = list(QUERIES)
 # anchors owner so all three mirrors share one value.
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 from bench_anchors import ANCHOR_FLOOR, era_seg_summary  # noqa: E402
+# the one session warm-up; perfbench imports warm_streaming from here
+from ab import warm_session, warm_streaming  # noqa: E402,F401
 
 
 def fault_probe_gbps(size_mb: int = 128, reps: int = 3) -> float:
@@ -197,38 +199,6 @@ def era_probe() -> dict:
     return out
 
 
-def warm_streaming(spark) -> None:
-    """One-time streaming-engine warm-up, billed to the session instead
-    of the first streaming query: state-store provider classloading,
-    micro-batch thread pools, WAL/commit-log codepaths. Measured round
-    13: the FIRST drain of a session reads ~2-3 s over its warm floor
-    (4.83 s vs 1.47 s for the same sessionization query; chained aggs
-    3.65 cold vs 2.24 warm in a mixed session) — session overhead by
-    the same argument as the JVM and numpy-worker warm-ups. A 3-row
-    availableNow drain through a real stateful aggregate touches all of
-    it once. Fail-open: a warm-up failure must never cost the run its
-    timings (the round-3 lesson, applied here too)."""
-    import os as _os
-
-    try:
-        from quantum_rag_data_pipeline_spark.paths import artifact_root
-
-        warm_dir = _os.path.join(artifact_root(), "bench_stream_warm",
-                                 spark.sparkContext.applicationId)
-        src = spark.range(3).selectExpr(
-            "id", "timestamp_micros(id * 1000000) as ts")
-        src.write.mode("overwrite").parquet(warm_dir)
-        sdf = (spark.readStream.schema(src.schema).parquet(warm_dir)
-               .groupBy("id").count())
-        q = (sdf.writeStream.foreachBatch(lambda df, _e: df.count())
-             .queryName("bench_stream_warm").outputMode("complete")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    except Exception as exc:  # noqa: BLE001 — warm-up must never fail a run
-        print(f"warm_streaming: skipped ({type(exc).__name__}: "
-              f"{str(exc)[:120]})", file=sys.stderr)
-
-
 def build_compact(total: float, timings: dict, errors: dict,
                   retried: list, sf: float, budget: int = 1700,
                   total_pre_retry: float | None = None,
@@ -301,26 +271,8 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up: JVM + parquet footer reads, not billed to any query
-    QUERIES["j2_join_agg"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    # warm the Python worker pool too (fork + numpy import happen once per
-    # reused worker): without this the first pandas-UDF query is billed
-    # ~2-3 s of worker spin-up that is session overhead, not query cost.
-    def _py_warm(it):
-        import numpy  # noqa: F401 — preload into the reused worker
-
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 32, 1, 32).mapInPandas(_py_warm, "id long") \
-        .write.mode("overwrite").format("noop").save()
-
-    # streaming-engine warm-up (round 13): the rotation prefix reorders
-    # per round, so WHICH streaming query lands first in the session is
-    # round-dependent — without this, that query is billed ~2-3 s of
-    # one-time engine spin-up and reads as a phantom regression.
-    warm_streaming(spark)
+    # warm-up (JVM, Python workers, streaming engine), not billed to any query
+    warm_session(spark, sf_dir)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}

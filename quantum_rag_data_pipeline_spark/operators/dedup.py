@@ -198,7 +198,7 @@ def ngram_jaccard_pairs(
     # it too) or it fails the exact array_intersect verification below —
     # the verified output is set-identical (pinned by
     # tests/test_independent_replication22.py and the hashed-vs-string
-    # A/B equality check in tools/r14/ab_hashkey.py).
+    # A/B equality check recorded in OPTIMIZATION_r14.md §15).
     prefix = packed.select(
         F.col(id_col), F.explode(F.slice("sh", 1, plen.cast("int"))).alias("shingle")
     ).select(F.col(id_col), F.xxhash64("shingle").alias("_shk"))

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 # reads 83 → 16,048,949 stats bits over 18 rounds, with rounds 17-18
 # already paying ~1 s of pure BigInt arithmetic each; a 2-jumps/round
 # variant quadruples digits per round and ground for 19 minutes inside
-# BigInteger.multiplyToomCook3 — tools/r14/cc_stats_growth.py). Every
+# BigInteger.multiplyToomCook3 — OPTIMIZATION_r14.md §5/§6). Every
 # STATS_RESET_EVERY rounds the label frame is therefore spilled to
 # per-process scratch parquet and re-read: the fresh file-backed relation
 # carries file-size stats (~20 bits) and growth restarts from there. The

@@ -981,11 +981,11 @@ def strict_funnel_bounded_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replacement (1h/128 gap buckets + assign_global_ids, which is
         # sound because the funnel's 1-hour join bound makes fixed-width
         # buckets value-ordered) measured CONSISTENTLY slower — A/B
-        # tools/r15/ab_funnel_median.py: old min 0.843/med 0.883 s vs
+        # in OPTIMIZATION_r15.md §6: old min 0.843/med 0.883 s vs
         # two-level min 1.275/med 1.318 s, old won all 5 alternating
         # pairs (two extra exchanges + broadcast per median dominate a
         # 35-row sort). At 100 TB, converted-user frames are large and
-        # the two-level shape in that tool IS the move — swap stage()'s
+        # the two-level shape recorded there IS the move — swap stage()'s
         # median for it there.
         g = df.select(gap.alias("g"), "user_id")
         med = g.select(

@@ -1130,7 +1130,7 @@ def kendall_tau_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planner's ENSURE_REQUIREMENTS exchange, it does not add one), and
     # a user-specified partition count is exempt from AQE coalescing, so
     # the quadratic work stays spread across the cluster width. A/B:
-    # tools/r15/ab_kendall_width.py.
+    # OPTIMIZATION_r15.md §8.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     j = o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"]).select(
         F.col("c_mktsegment").alias("seg"),

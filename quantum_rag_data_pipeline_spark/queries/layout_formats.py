@@ -1792,8 +1792,8 @@ def cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was distinct -> cache -> self-join on shingle -> pair agg (4
     # shuffles + a cached mid-frame); pair counts are identical because
     # both count one row per (pair, shingle-where-both-occur). A/B at
-    # sf0.1: min 2.006 -> 1.325 s, identical rows (tools/r14/
-    # ab_cross_source.py).
+    # sf0.1: min 2.006 -> 1.325 s, identical rows (OPTIMIZATION_r14.md
+    # §11).
     srcs = (
         idx.join(d.select("doc_id", "source"), "doc_id")
         .groupBy("shingle")

@@ -514,3 +514,71 @@ def test_round_gate_wait_healthy_needs_consecutive_pair():
         {"disk_wgbps": None, "cpu_gflops_min": 25.0})
     # budget exhaustion -> False (deadline already passed at entry)
     assert run([bad, bad], max_minutes=0) is False
+
+
+def _ab():
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    import ab
+
+    return ab
+
+
+def test_ab_verdict_rule():
+    """tools/ab.py's verdict: a side is faster only with >= 9/10 pair
+    wins AND a median gap wider than A's inter-quartile distance; ties
+    count for neither side."""
+    verdict = _ab().verdict
+    a = [1.00, 1.02, 1.04, 1.06, 1.08, 1.10, 1.12, 1.14, 1.16, 1.18]  # IQR 0.09
+    # B wins 9 of 10, medians 1.09 vs 0.79
+    b9 = [x - 0.3 for x in a[:9]] + [a[9] + 0.1]
+    r = verdict(a, b9)
+    assert (r["b_wins"], r["a_wins"], r["verdict"]) == (9, 1, "B faster")
+    # B wins 8: not enough pairs, however large the gap
+    b8 = [x - 0.3 for x in a[:8]] + [x + 0.1 for x in a[8:]]
+    assert verdict(a, b8)["verdict"] == "unresolved"
+    # B wins all 10 but by less than A's IQR
+    r = verdict(a, [x - 0.05 for x in a])
+    assert (r["b_wins"], r["verdict"]) == (10, "unresolved")
+    # a tied pair counts for neither side: 9 wins + 1 tie is still 9/10
+    tie = [x - 0.3 for x in a[:9]] + [a[9]]
+    r = verdict(a, tie)
+    assert (r["b_wins"], r["a_wins"], r["verdict"]) == (9, 0, "B faster")
+    # ...and 8 wins + 2 ties is not enough
+    r = verdict(a, [x - 0.3 for x in a[:8]] + a[8:])
+    assert (r["b_wins"], r["a_wins"], r["verdict"]) == (8, 0, "unresolved")
+    # the mirror: A wins 9 and B's median is above A's by more than the IQR
+    r = verdict(a, [x + 0.3 for x in a[:9]] + [a[9] - 0.1])
+    assert (r["a_wins"], r["verdict"]) == (9, "B slower")
+
+
+def test_ab_arms_are_isolated(sf_dir):
+    """Two pairs of `ab.py HEAD .+spark.sql.shuffle.partitions=3`: order
+    alternates, the HEAD child imports the package from its temporary
+    worktree and the `.` child from the repo, the conf reaches only its
+    arm, the result hashes match, and no worktree outlives the run."""
+    def worktrees():
+        return subprocess.run(["git", "-C", REPO, "worktree", "list", "--porcelain"],
+                              capture_output=True, text=True, check=True).stdout
+
+    before = worktrees()
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "ab.py"), "HEAD",
+         ".+spark.sql.shuffle.partitions=3", "j2_join_agg", "--pairs", "2"],
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
+        capture_output=True, text=True, timeout=900)
+    assert r.returncode == 0, r.stderr[-2000:]
+    rec = json.loads(r.stdout.strip().splitlines()[-1])
+    assert worktrees() == before
+    assert [p["order"] for p in rec["pairs"]] == [["A", "B"], ["B", "A"]]
+    head_root = rec["roots"]["A"]
+    assert not os.path.exists(head_root)
+    assert os.path.commonpath([head_root, REPO]) != REPO
+    for p in rec["pairs"]:
+        assert p["A"]["package"] == os.path.join(head_root, "quantum_rag_data_pipeline_spark")
+        assert p["B"]["package"] == os.path.join(REPO, "quantum_rag_data_pipeline_spark")
+        assert p["A"]["conf"] == {}
+        assert p["B"]["conf"] == {"spark.sql.shuffle.partitions": "3"}
+        assert set(p["era"]) >= {"fault_gbps", "cpu_gflops", "disk_wgbps"}
+    q = rec["queries"]["j2_join_agg"]
+    assert q["errors"] == [] and q["hash_match"] is True
+    assert q["pairs"] == 2 and q["verdict"] in {"B faster", "B slower", "unresolved"}

@@ -88,22 +88,9 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="triage")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up discipline as bench.py: JVM + py-worker pool
-    QUERIES["j2_join_agg"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    def _py_warm(it):
-        import numpy  # noqa: F401
-
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 32, 1, 32).mapInPandas(_py_warm, "id long") \
-        .write.mode("overwrite").format("noop").save()
-    # streaming machinery too (round 13) — otherwise the first streaming
-    # suspect in the list absorbs the session's one-time engine spin-up
-    # and triages as a phantom WARN
-    from bench import warm_streaming
-    warm_streaming(spark)
+    # same warm-up as bench.py: JVM, py-worker pool, streaming engine
+    from ab import warm_session
+    warm_session(spark, sf_dir)
 
     out = {}
     for name in names:
