@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from quantum_rag_data_pipeline_spark.functions.formatting import sql_ident, sql_str
+
 # Minimal deterministic stopword lists for the n-gram/stopword language-ID
 # heuristic. Real deployments would swap in larger lists; the operator shape
 # (score = |tokens ∩ stopwords| per language, argmax) is what matters.
@@ -50,21 +52,28 @@ def bpe_ish_token_count(col: Column | str) -> Column:
 def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring columns: length, token stats, punctuation ratio,
     stopword ratio, distinct-token ratio. These are the standard cheap
-    filters (C4/Gopher-style) applied before expensive dedup/embedding."""
-    toks = tokens(text_col)
-    n_tok = F.size(toks)
-    n_char = F.length(F.col(text_col))
-    en_stop = F.array(*[F.lit(s) for s in LANG_STOPWORDS["en"]])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(en_stop, F.lower(t))))
-    n_punct = n_char - F.length(F.regexp_replace(F.col(text_col), PUNCT_RE, ""))
-    return df.select(
-        "*",
-        n_char.alias("q_n_chars"),
-        n_tok.alias("q_n_tokens"),
-        F.when(n_tok > 0, (n_char.cast("double") / n_tok)).alias("q_avg_token_len"),
-        F.when(n_char > 0, n_punct.cast("double") / n_char).otherwise(F.lit(0.0)).alias("q_punct_ratio"),
-        F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(F.lit(0.0)).alias("q_stopword_ratio"),
-        F.when(n_tok > 0, F.size(F.array_distinct(toks)).cast("double") / n_tok).alias("q_distinct_ratio"),
+    filters (C4/Gopher-style) applied before expensive dedup/embedding.
+
+    One ``selectExpr`` of SQL strings over a token array materialized in
+    a projection of its own: Catalyst does not eliminate common
+    subexpressions into lambdas, so an inline tokenization would run
+    once per use."""
+    text = sql_ident(text_col)
+    ws = sql_str(r"\s+")
+    tokenized = f"filter(split(trim({text}), {ws}), t -> t != '') AS _q_toks"
+    stop = ", ".join(map(sql_str, LANG_STOPWORDS["en"]))
+    n_tok, n_char = "size(_q_toks)", f"length({text})"
+    n_punct = f"{n_char} - length(regexp_replace({text}, {sql_str(PUNCT_RE)}, ''))"
+    n_stop = f"size(filter(_q_toks, t -> array_contains(array({stop}), lower(t))))"
+    return df.selectExpr("*", tokenized).selectExpr(
+        *map(sql_ident, df.columns),
+        f"{n_char} AS q_n_chars",
+        f"{n_tok} AS q_n_tokens",
+        f"CASE WHEN {n_tok} > 0 THEN CAST({n_char} AS DOUBLE) / {n_tok} END AS q_avg_token_len",
+        f"CASE WHEN {n_char} > 0 THEN CAST({n_punct} AS DOUBLE) / {n_char} ELSE 0D END AS q_punct_ratio",
+        f"CASE WHEN {n_tok} > 0 THEN CAST({n_stop} AS DOUBLE) / {n_tok} ELSE 0D END AS q_stopword_ratio",
+        f"CASE WHEN {n_tok} > 0 THEN CAST(size(array_distinct(_q_toks)) AS DOUBLE) / {n_tok} END "
+        "AS q_distinct_ratio",
     )
 
 

@@ -11,10 +11,15 @@ this plan is ONE lazy DataFrame DAG over all days:
         (endpoint, field): permissive cast (P2) + A1/A2 semantics
       → left join weather (missing weather proceeds, missing ERCOT
         aborts the row — reference sentence_builder.py:122-127)
-      → derived renewables (P8) → 11-line sentence (U2, pure expression)
-      → pandas_udf embedding (U1) → parquet/JDBC upsert by vector_id (K1)
+      → ONE select: vector_id, derived renewables (P8) → 11-line
+        sentence (U2, pure expression), pandas_udf embedding (U1) of
+        that sentence, updated_at
+      → parquet/JDBC upsert by vector_id (K1)
 
-The plan has one ERCOT leaf whatever the window length, and its row
+The aggregates and the sentence are Spark SQL strings, which the JVM
+parses one per call: the 2-day plan builds in ~210 py4j round trips,
+where the same expressions built Column by Column took 3.5k-4.9k. The
+plan has one ERCOT leaf whatever the window length, and its row
 count rides the upsert as an ``Observation`` (no second pass). At scale
 the fetch can move executor-side: ``sources.ercot_datasource`` decodes
 through the same ``envelope_rows`` into the same long-form cells, one
@@ -65,8 +70,8 @@ METRIC_CATALOG: dict[str, list[tuple[str, str, str]]] = {
 }
 
 
-#: A1/A2 aggregation methods of the catalog
-AGGREGATES = {"average": F.avg, "max": F.max, "sum": F.sum}
+#: A1/A2 aggregation methods of the catalog, as Spark SQL aggregates
+AGGREGATES = {"average": "avg", "max": "max", "sum": "sum"}
 
 
 def fetch_all_endpoints(
@@ -98,22 +103,23 @@ def fetch_all_endpoints(
 
 
 def daily_aggregates(cells: DataFrame, headers: dict[str, set[str]]) -> DataFrame:
-    """One row per day any endpoint served, one column per catalog alias,
-    with the reference's semantics: a field absent from the endpoint's
-    header → NULL (P3 → N/A downstream); a day the endpoint served with
-    zero parseable values → 0.0 (src/main.py:90-91); a day the endpoint
-    did not serve → NULL."""
+    """One row per day any endpoint served, one DOUBLE column per catalog
+    alias, with the reference's semantics: a field absent from the
+    endpoint's header → NULL (P3 → N/A downstream); a day the endpoint
+    served with zero parseable values → 0.0 (src/main.py:90-91); a day
+    the endpoint did not serve → NULL. Each aggregate is one SQL string
+    (``0D``: a bare ``0.0`` would be a DECIMAL)."""
     aggs = []
     for name, catalog in METRIC_CATALOG.items():
-        ours = F.col("endpoint") == name
-        served = F.when(F.max(ours), F.lit(0.0))
+        ours = f"endpoint = '{name}'"
+        served = f"CASE WHEN max({ours}) THEN 0D END"
         for field, method, alias in catalog:
             if field in headers[name]:
-                value = F.when(ours & (F.col("field") == field), F.col("value").try_cast("double"))
-                aggs.append(F.coalesce(AGGREGATES[method](value), served).alias(alias))
+                value = f"CASE WHEN {ours} AND field = '{field}' THEN try_cast(value AS DOUBLE) END"
+                aggs.append(f"coalesce({AGGREGATES[method]}({value}), {served}) AS {alias}")
             else:
-                aggs.append(F.lit(None).cast("double").alias(alias))
-    return cells.groupBy("date_from").agg(*aggs)
+                aggs.append(f"CAST(NULL AS DOUBLE) AS {alias}")
+    return cells.groupBy("date_from").agg(*map(F.expr, aggs))
 
 
 def build_daily_summaries(
@@ -125,55 +131,52 @@ def build_daily_summaries(
     encoder=None,
     embed_dim: int = 1536,
 ) -> DataFrame:
-    """Returns one row per day: (vector_id, semantic_sentence, embedding,
-    updated_at) — the pgvector sink row (FIXTURES.md §4)."""
+    """Returns one row per day: (vector_id, semantic_sentence, date_from,
+    embedding, updated_at) — the pgvector sink row (FIXTURES.md §4)."""
     # a day missing from ONE endpoint keeps its row with NULL metrics
     # (→ N/A in the sentence), matching the reference, where
     # extract_field_values returns {} for an empty envelope but the day's
     # sentence still renders (src/main.py + sentence_builder N/A paths).
     # A day with data from NO endpoint forms no group — the reference's
     # fetch-returned-None case.
-    joined = daily_aggregates(*fetch_all_endpoints(spark, queries, start, end))
-    # DAM price parity (src/main.py:207): a falsy average (0.0 or missing)
-    # renders N/A, not "0.00 $/MWh"; bround = Python round() half-even.
-    raw_dam = F.col("dam_avg_price_raw")
-    joined = joined.withColumn(
-        "dam_avg_price",
-        F.when(raw_dam.isNotNull() & (raw_dam != 0.0), F.bround(raw_dam, 2)),
-    )
+    days = daily_aggregates(*fetch_all_endpoints(spark, queries, start, end))
     if weather_daily_avg is not None:
-        w = weather_daily_avg.select(F.col("date").cast("string").alias("date_from"), "avg_temp_c")
-        joined = joined.join(F.broadcast(w), "date_from", "left")
+        w = weather_daily_avg.selectExpr("CAST(date AS STRING) AS date_from", "avg_temp_c")
+        days = days.join(F.broadcast(w), "date_from", "left")
+        avg_temp_c = "avg_temp_c"
     else:
-        joined = joined.withColumn("avg_temp_c", F.lit(None).cast("double"))
-
+        avg_temp_c = "CAST(NULL AS DOUBLE)"
     sentence = semantic_sentence(
-        date_from=F.col("date_from"),
-        date_to=F.date_add(F.col("date_from"), 1),
-        agg_load_summary=F.col("agg_load_summary"),
-        sum_telem_gen_mw=F.col("sum_telem_gen_mw"),
-        dam_avg_price=F.col("dam_avg_price"),
-        wind_sum=F.col("wind_sum"),
-        solar_sum=F.col("solar_sum"),
-        remres_sum=F.col("remres_sum"),
-        mw_offered=F.col("mw_offered"),
-        sum_telem_dsr_load=F.col("sum_telem_dsr_load"),
-        sum_output_sched=F.col("sum_output_sched"),
-        sum_lsl_output_sched=F.col("sum_lsl_output_sched"),
-        sum_hsl_output_sched=F.col("sum_hsl_output_sched"),
-        sum_base_point_non_irr=F.col("sum_base_point_non_irr"),
-        sum_hasl_non_irr=F.col("sum_hasl_non_irr"),
-        sum_lasl_non_irr=F.col("sum_lasl_non_irr"),
-        avg_temp_c=F.col("avg_temp_c"),
+        date_from="date_from",
+        date_to="date_add(date_from, 1)",
+        agg_load_summary="agg_load_summary",
+        sum_telem_gen_mw="sum_telem_gen_mw",
+        # DAM price parity (src/main.py:207): a falsy average (0.0 or
+        # missing) renders N/A, not "0.00 $/MWh"
+        dam_avg_price="nullif(dam_avg_price_raw, 0D)",
+        wind_sum="wind_sum",
+        solar_sum="solar_sum",
+        remres_sum="remres_sum",
+        mw_offered="mw_offered",
+        sum_telem_dsr_load="sum_telem_dsr_load",
+        sum_output_sched="sum_output_sched",
+        sum_lsl_output_sched="sum_lsl_output_sched",
+        sum_hsl_output_sched="sum_hsl_output_sched",
+        sum_base_point_non_irr="sum_base_point_non_irr",
+        sum_hasl_non_irr="sum_hasl_non_irr",
+        sum_lasl_non_irr="sum_lasl_non_irr",
+        avg_temp_c=avg_temp_c,
     )
     embed = make_embed_udf(encoder, embed_dim)
-    return joined.select(
-        F.concat(F.lit("daily_summary_"), F.col("date_from")).alias("vector_id"),
-        sentence.alias("semantic_sentence"),
-        F.col("date_from"),
-    ).withColumn(
-        "embedding", embed(scrubbed_for_embedding(F.col("semantic_sentence")))
-    ).withColumn("updated_at", F.current_timestamp())
+    # the embedding reads the sentence by its alias (a lateral column
+    # alias), so the plan renders each sentence once
+    return days.select(
+        F.expr("concat('daily_summary_', date_from) AS vector_id"),
+        F.expr(f"{sentence} AS semantic_sentence"),
+        "date_from",
+        embed(scrubbed_for_embedding(F.col("semantic_sentence"))).alias("embedding"),
+        F.current_timestamp().alias("updated_at"),
+    )
 
 
 def run_daily_summary_pipeline(

@@ -555,7 +555,8 @@ def test_ab_arms_are_isolated(sf_dir):
     """Two pairs of `ab.py HEAD .+spark.sql.shuffle.partitions=3`: order
     alternates, the HEAD child imports the package from its temporary
     worktree and the `.` child from the repo, the conf reaches only its
-    arm, the result hashes match, and no worktree outlives the run."""
+    arm, every timed build records its py4j round trips, the result
+    hashes match, and no worktree outlives the run."""
     def worktrees():
         return subprocess.run(["git", "-C", REPO, "worktree", "list", "--porcelain"],
                               capture_output=True, text=True, check=True).stdout
@@ -579,6 +580,7 @@ def test_ab_arms_are_isolated(sf_dir):
         assert p["A"]["conf"] == {}
         assert p["B"]["conf"] == {"spark.sql.shuffle.partitions": "3"}
         assert set(p["era"]) >= {"fault_gbps", "cpu_gflops", "disk_wgbps"}
+        assert all(r["build_py4j"] > 0 for s in "AB" for r in p[s]["queries"]["j2_join_agg"]["runs"])
     q = rec["queries"]["j2_join_agg"]
     assert q["errors"] == [] and q["hash_match"] is True
     assert q["pairs"] == 2 and q["verdict"] in {"B faster", "B slower", "unresolved"}

@@ -4,10 +4,12 @@ through the full pipeline — fixture envelopes → aggregate → join →
 sentence → fake embedding → upsert."""
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from quantum_rag_data_pipeline_spark.functions.formatting import fmt_metric
 from quantum_rag_data_pipeline_spark.plans.daily_summary import (
     METRIC_CATALOG,
     build_daily_summaries,
@@ -136,3 +138,27 @@ def test_pipeline_upsert_idempotent(spark, golden_queries, tmp_path):
     second = {r["vector_id"]: r["semantic_sentence"] for r in spark.read.parquet(sink).collect()}
     assert n1 == n2 == 1
     assert first == second  # same sink state modulo updated_at (K1)
+
+
+def _format_values() -> list[float | None]:
+    """Seeded values for the formatter: ties in the decimal
+    representation at 1 to 3 decimals (``21.95`` is 21.9499… in binary,
+    ``0.125`` an exact binary tie), signed zeros and half-integers, and
+    uniform draws over five magnitudes."""
+    rng = random.Random(20250508)
+    values = [None, 0.0, -0.0, 0.5, -0.5, 1.5, 2.5, -2.5, 21.95, 0.125, 2.675, 1.005, 51405.5]
+    values += [float(f"{rng.randint(-99999, 99999)}5e-{d}") for d in (1, 2, 3) for _ in range(400)]
+    values += [rng.uniform(-10.0 ** e, 10.0 ** e) for e in (0, 1, 2, 4, 6) for _ in range(200)]
+    return values
+
+
+@pytest.mark.parametrize("precision", [0, 1, 2])
+def test_fmt_metric_matches_python_formatting(spark, precision):
+    """``fmt_metric`` renders every value as the reference's
+    ``f"{v:.Nf} MW"`` does (``format_metric``, sentence_builder.py:32-38),
+    and NULL as N/A."""
+    values = _format_values()
+    df = spark.createDataFrame(list(enumerate(values)), "i int, v double")
+    got = [r[1] for r in sorted(df.selectExpr("i", fmt_metric("v", "MW", precision)).collect())]
+    want = ["N/A" if v is None else f"{v:.{precision}f} MW" for v in values]
+    assert [(v, g) for v, g, w in zip(values, got, want) if g != w] == []

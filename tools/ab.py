@@ -20,7 +20,8 @@ first in odd ones, after one ``bench.era_probe()``. A child starts a
 session, runs ``warm_session``, then per query: one untimed run that
 collects the result and hashes it with ``oracle_check.table_hash``;
 then three noop-sink runs, cache cleared before each, timing the
-query-function call (``build_s``) and the write (``exec_s``) apart. The
+query-function call (``build_s``, and its py4j round trips as
+``build_py4j``, see ``py4j_calls``) and the write (``exec_s``) apart. The
 last timed run's jobs, stages and tasks are read from its job group
 (jobs a streaming query runs on its own thread are not in it), and each
 operator of the formatted physical plan is counted once.
@@ -52,6 +53,7 @@ import subprocess
 import sys
 import tempfile
 import time
+import types
 
 TOOLS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TOOLS)
@@ -167,6 +169,32 @@ def _plan_ops(df) -> dict:
     return ops
 
 
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Counts the py4j round trips the driver makes inside the block::
+
+        with py4j_calls(spark) as calls:
+            build(spark)
+        calls.n
+
+    Every driver-to-JVM call, including the proxy releases py4j sends
+    when Python garbage-collects a JVM object reference, goes through
+    ``send_command``."""
+    client = spark.sparkContext._gateway._gateway_client
+    calls = types.SimpleNamespace(n=0)
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.n += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        client.send_command = send
+
+
 def _job_counts(sc, group: str) -> dict:
     # the status store is fed by the listener bus; drain it first so the
     # last stage's task counts are in
@@ -194,13 +222,15 @@ def _measure(spark, fn, sf_dir: str, group: str) -> dict:
         sc.setJobGroup(f"{group}#{i}", group)
         try:
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
+            with py4j_calls(spark) as calls:
+                df = fn(spark, sf_dir)
             t1 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
             t2 = time.perf_counter()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        rec["runs"].append({"build_s": round(t1 - t0, 4), "exec_s": round(t2 - t1, 4)})
+        rec["runs"].append({"build_s": round(t1 - t0, 4), "exec_s": round(t2 - t1, 4),
+                            "build_py4j": calls.n})
     rec.update(_job_counts(sc, f"{group}#{RUNS - 1}"))
     return rec
 
