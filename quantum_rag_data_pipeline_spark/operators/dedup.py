@@ -300,16 +300,17 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, est_jaccard).
     """
     rows_per_band = num_hashes // bands
-    # sig feeds three plan branches (banding + two est joins). Measured:
-    # exchange reuse does NOT unify them (executed plan shows 0
-    # ReusedExchange — the branches wrap the agg in different projections
-    # before their own shuffles), so without materialization the
-    # explode + 128-way grouped-min lineage runs 3x. cache() computes it
-    # once inside the same action (no eager planning, unlike
-    # localCheckpoint). Lifetime caveat as in ngram_jaccard_pairs: the
-    # entry persists until clearCache — harnesses running many queries
-    # per session must clear periodically.
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, n).cache()
+    # sig feeds three plan branches (banding + two est joins) and is NOT
+    # cached: AQE plans the grouped-min aggregate's shuffle once and the
+    # other two branches read it as a ReusedExchange, so the explode +
+    # grouped-min map stage runs once per action. Measured on the
+    # rag_ingest plan (Spark 4.1, ~1.3k docs, 4 cores): 3 ReusedExchange
+    # and 0 InMemoryRelation in the final adaptive plan, 10 jobs and 19
+    # tasks per ingest. A .cache() here would make the cached relation a
+    # separate adaptive plan that keeps all 32 shuffle partitions and
+    # re-runs its input's upstream (scan, gate, exact dedup): 17 jobs and
+    # 277 tasks.
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, n)
     # band hashes as one SQL string, for the same reason as the mins
     band_hashes = ", ".join(
         "xxhash64(concat_ws(',', " + ", ".join(

@@ -36,6 +36,12 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
+def tokens_sql(text_col: str) -> str:
+    """``tokens`` of the column ``text_col`` as a SQL expression string."""
+    ws = sql_str(r"\s+")
+    return f"filter(split(trim({sql_ident(text_col)}), {ws}), t -> t != '')"
+
+
 def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
@@ -59,8 +65,7 @@ def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     subexpressions into lambdas, so an inline tokenization would run
     once per use."""
     text = sql_ident(text_col)
-    ws = sql_str(r"\s+")
-    tokenized = f"filter(split(trim({text}), {ws}), t -> t != '') AS _q_toks"
+    tokenized = f"{tokens_sql(text_col)} AS _q_toks"
     stop = ", ".join(map(sql_str, LANG_STOPWORDS["en"]))
     n_tok, n_char = "size(_q_toks)", f"length({text})"
     n_punct = f"{n_char} - length(regexp_replace({text}, {sql_str(PUNCT_RE)}, ''))"

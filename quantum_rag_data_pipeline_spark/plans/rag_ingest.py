@@ -5,7 +5,8 @@ ERCOT daily summary, done for arbitrary documents at corpus scale.
     documents
       → quality gate   (cheap column-expression filters, C4/Gopher style)
       → exact dedup    (md5 fingerprint groupBy, keep lowest id)
-      → near dedup     (MinHash-LSH candidates ≥ threshold → drop higher id)
+      → near dedup     (MinHash-LSH candidates ≥ threshold → drop higher id;
+                        then one row per doc_id)
       → embed          (Arrow pandas_udf; injected encoder, fake in tests)
       → vector store   (keyed parquet/JDBC upsert — idempotent re-runs)
       → top-k serve    (brute-force or SRP-LSH cosine against the store)
@@ -26,11 +27,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from quantum_rag_data_pipeline_spark.functions.embedding import make_embed_udf
 from quantum_rag_data_pipeline_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
 from quantum_rag_data_pipeline_spark.operators.similarity import brute_force_topk
-from quantum_rag_data_pipeline_spark.operators.text import quality_metrics
+from quantum_rag_data_pipeline_spark.operators.text import tokens_sql
 
 
 def quality_gate(
@@ -39,14 +41,36 @@ def quality_gate(
     max_tokens: int = 100_000,
     min_distinct_ratio: float = 0.1,
 ) -> DataFrame:
-    """Keep documents passing the cheap quality filters. Pure column
-    expressions — runs at scan speed, before anything expensive."""
-    q = quality_metrics(docs)
-    return q.filter(
-        (F.col("q_n_tokens") >= min_tokens)
-        & (F.col("q_n_tokens") <= max_tokens)
-        & (F.col("q_distinct_ratio") >= min_distinct_ratio)
-    ).select(*docs.columns)
+    """Keep documents passing the cheap quality filters (token count and
+    distinct-token ratio, as ``quality_metrics`` defines them). Pure
+    column expressions — runs at scan speed, before anything expensive.
+
+    The token array is bound once per row as the lambda variable of a
+    one-element ``exists``: Catalyst does not eliminate common
+    subexpressions into lambdas, and predicate pushdown inlines a
+    projected token column back into the Filter, so each reference to
+    it would otherwise re-run the split."""
+    n = "size(toks)"
+    return docs.filter(
+        f"exists(array({tokens_sql('text')}), toks -> "
+        f"{n} >= {int(min_tokens)} AND {n} <= {int(max_tokens)} AND "
+        f"CASE WHEN {n} > 0 THEN CAST(size(array_distinct(toks)) AS DOUBLE) / {n} END "
+        f">= {float(min_distinct_ratio)!r}D)"
+    )
+
+
+def one_per_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """One row per id: the lowest text. A batch that repeats an id would
+    otherwise reach the keyed store as several rows, of which the upsert
+    keeps whichever its window ties put first. On ``near_dedup``'s output
+    it adds no shuffle: the anti-join's ``hashpartitioning(id)`` exchange
+    already clusters each id in one partition. Earlier in the chain it
+    would cluster the MinHash aggregate's input by id too: the aggregate
+    would then have no shuffle of its own to reuse, and would run once
+    per consumer."""
+    w = Window.partitionBy(id_col).orderBy(F.col(text_col))
+    return (docs.withColumn("_id_rn", F.row_number().over(w))
+            .filter(F.col("_id_rn") == 1).drop("_id_rn"))
 
 
 def near_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -81,7 +105,9 @@ def ingest(
     embed_dim: int = 64,
     near_dup_threshold: float = 0.6,
 ) -> dict:
-    """Full ingest; returns stage-count telemetry. Idempotent by doc_id.
+    """Full ingest; returns stage-count telemetry. Idempotent by doc_id:
+    a batch that repeats a doc_id stores (and counts in
+    ``after_near_dedup``) one row for it, the lowest text (``one_per_id``).
 
     One Spark action: each stage's row count is an ``Observation`` on
     that stage's frame, collected while the upsert writes. Only when the
@@ -93,7 +119,7 @@ def ingest(
     raw, obs_raw = _observed(docs)
     gated, obs_gated = _observed(quality_gate(raw))
     exact, obs_exact = _observed(exact_dedup(gated))
-    deduped, obs_final = _observed(near_dedup(exact, threshold=near_dup_threshold))
+    deduped, obs_final = _observed(one_per_id(near_dedup(exact, threshold=near_dup_threshold)))
 
     embed = make_embed_udf(encoder, embed_dim)
     rows = deduped.select(

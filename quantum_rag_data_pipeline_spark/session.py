@@ -74,9 +74,12 @@ def get_spark(
 class cache_scope:
     """Bound the lifetime of internal ``.cache()`` entries.
 
-    Several corpus queries cache a mid-plan frame that three-plus plan
-    branches consume (see ``operators/dedup.py`` — without the cache the
-    lineage re-runs per branch). Spark's CacheManager keeps those entries
+    Several corpus queries cache a mid-plan frame that several plan
+    branches consume: ``ngram_jaccard_pairs``, ``minhash_lsh_exact_pairs``
+    and ``simhash_pairs`` in ``operators/dedup.py``, ``semdedup_prune`` in
+    ``operators/similarity.py``. (``minhash_lsh_pairs`` caches nothing:
+    adaptive execution reuses its signature shuffle across its branches,
+    see the comment there.) Spark's CacheManager keeps those entries
     until ``clearCache``/``unpersist`` — they are NOT reclaimed by the
     ContextCleaner like checkpoint RDDs — so a long-lived session that
     invokes many corpus queries without clearing accumulates them and

@@ -555,8 +555,10 @@ def test_ab_arms_are_isolated(sf_dir):
     """Two pairs of `ab.py HEAD .+spark.sql.shuffle.partitions=3`: order
     alternates, the HEAD child imports the package from its temporary
     worktree and the `.` child from the repo, the conf reaches only its
-    arm, every timed build records its py4j round trips, the result
-    hashes match, and no worktree outlives the run."""
+    arm, every timed build records its py4j round trips, each arm
+    records the operators of its final adaptive plan apart from its
+    initial plan, the result hashes match, and no worktree outlives the
+    run."""
     def worktrees():
         return subprocess.run(["git", "-C", REPO, "worktree", "list", "--porcelain"],
                               capture_output=True, text=True, check=True).stdout
@@ -581,6 +583,13 @@ def test_ab_arms_are_isolated(sf_dir):
         assert p["B"]["conf"] == {"spark.sql.shuffle.partitions": "3"}
         assert set(p["era"]) >= {"fault_gbps", "cpu_gflops", "disk_wgbps"}
         assert all(r["build_py4j"] > 0 for s in "AB" for r in p[s]["queries"]["j2_join_agg"]["runs"])
+        for s in "AB":
+            rec_s = p[s]["queries"]["j2_join_agg"]
+            # query stages exist only once adaptive execution has run
+            assert not any(op.endswith("QueryStage") for op in rec_s["plan"])
+            assert rec_s["final_plan"].get("ShuffleQueryStage", 0) >= 1
+            assert rec_s["final_plan"]["Scan parquet"] == rec_s["plan"]["Scan parquet"]
     q = rec["queries"]["j2_join_agg"]
     assert q["errors"] == [] and q["hash_match"] is True
     assert q["pairs"] == 2 and q["verdict"] in {"B faster", "B slower", "unresolved"}
+    assert isinstance(q["final_plan_diff"], dict)

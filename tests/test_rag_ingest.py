@@ -4,7 +4,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.functions.embedding import fake_encode_batch
-from quantum_rag_data_pipeline_spark.plans.rag_ingest import ingest, serve_topk
+from quantum_rag_data_pipeline_spark.operators.text import quality_metrics
+from quantum_rag_data_pipeline_spark.plans.rag_ingest import ingest, quality_gate, serve_topk
 from quantum_rag_data_pipeline_spark.sources.registry import load_table
 
 
@@ -98,3 +99,91 @@ def test_ingest_runs_no_count_pass(spark, sf_dir, tmp_path, monkeypatch):
     assert ingest(spark, corpus, store, embed_dim=8) == expected
     monkeypatch.undo()
     assert spark.read.parquet(store).count() == expected["after_near_dedup"]
+
+
+def test_ingest_repeated_doc_id(spark, tmp_path):
+    """A batch that repeats a doc_id stores one row for it, the lowest
+    text, in either batch order, and ``after_near_dedup`` counts the
+    stored rows."""
+    keys = ("raw", "after_quality", "after_exact_dedup", "after_near_dedup")
+    for i, rows in enumerate(([(1, LONG_A), (1, LONG_B), (2, LONG_C)],
+                              [(1, LONG_B), (2, LONG_C), (1, LONG_A)])):
+        store = str(tmp_path / f"vector_store{i}")
+        tally = ingest(spark, spark.createDataFrame(rows, SCHEMA), store, embed_dim=8)
+        assert tally == dict(zip(keys, (3, 3, 3, 2)))
+        stored = {r["doc_id"]: r["text"] for r in spark.read.parquet(store).collect()}
+        assert stored == {1: min(LONG_A, LONG_B), 2: LONG_C}
+
+
+def _write_plan(spark, path: str) -> str:
+    """The physical plan of the last SQL execution that wrote under
+    ``path`` (the upsert writes into ``<path>.staging-*``), as the SQL
+    status store holds it: its final adaptive plan once it has run."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 20), 20)
+    plans = [recent.apply(i).physicalPlanDescription() for i in range(recent.size())]
+    return [p for p in plans if f"{path}.staging-" in p][-1]
+
+
+def test_ingest_plans_one_adaptive_plan(spark, sf_dir, tmp_path):
+    """One ingest is one adaptive plan: no cached relation in its write
+    (a cache is planned apart, re-runs the gate and exact dedup under it
+    and keeps every shuffle partition), the MinHash aggregate's shuffle
+    read again as a ``ReusedExchange``, and at most 11 jobs (17 with the
+    signature cache)."""
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    corpus = docs.unionByName(docs.filter(F.col("doc_id") % 7 == 0).select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text"))
+    store = str(tmp_path / "vector_store")
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-plan-shape", "ingest-plan-shape")
+    try:
+        ingest(spark, corpus, store, embed_dim=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = _write_plan(spark, store)
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    assert "InMemoryRelation" not in plan and "TableCacheQueryStage" not in plan
+    assert "ReusedExchange" in final
+    assert len(sc.statusTracker().getJobIdsForGroup("ingest-plan-shape")) <= 11
+
+
+def test_quality_gate_tokenizes_once(spark, sf_dir):
+    """The gate's executed Filter splits each text once (5 times when it
+    filtered on ``quality_metrics``' columns: predicate pushdown inlined
+    the projected token array into each condition)."""
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    plan = quality_gate(docs)._jdf.queryExecution().executedPlan().toString()
+    filters = [line for line in plan.splitlines()
+               if line.lstrip(" :+-*()0123456789").startswith("Filter ")]
+    assert len(filters) == 1 and filters[0].count("split(") == 1, plan
+
+
+def test_quality_gate_matches_quality_metrics(spark, tmp_path):
+    """The gate keeps exactly the documents whose ``quality_metrics``
+    pass its thresholds: on the metrics' edge documents (empty,
+    whitespace-only, NULL, punctuation-only, mixed case) and on both
+    sides of each threshold, at the default thresholds and others."""
+    from test_operators import QUALITY_EDGE_DOCS
+
+    rows = QUALITY_EDGE_DOCS + [
+        (6, "one two three four five"), (7, "one two three four"),
+        (8, " ".join(["spam"] * 20)), (9, " ".join(["spam"] * 9 + ["eggs"])),
+        (10, "  alpha beta\tgamma  delta\n epsilon  "),
+    ]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, SCHEMA).write.parquet(path)
+    docs = spark.read.parquet(path)
+    q = quality_metrics(docs)
+    for kw in ({}, {"min_tokens": 0, "min_distinct_ratio": 0.0},
+               {"min_tokens": 2, "max_tokens": 9, "min_distinct_ratio": 0.5}):
+        lo, hi, ratio = kw.get("min_tokens", 5), kw.get("max_tokens", 100_000), \
+            kw.get("min_distinct_ratio", 0.1)
+        want = q.filter((F.col("q_n_tokens") >= lo) & (F.col("q_n_tokens") <= hi)
+                        & (F.col("q_distinct_ratio") >= ratio))
+        got = sorted(r["doc_id"] for r in quality_gate(docs, **kw).collect())
+        assert got == sorted(r["doc_id"] for r in want.collect()), kw
+        if not kw:
+            assert got == [5, 6, 9, 10]

@@ -23,15 +23,18 @@ then three noop-sink runs, cache cleared before each, timing the
 query-function call (``build_s``, and its py4j round trips as
 ``build_py4j``, see ``py4j_calls``) and the write (``exec_s``) apart. The
 last timed run's jobs, stages and tasks are read from its job group
-(jobs a streaming query runs on its own thread are not in it), and each
-operator of the formatted physical plan is counted once.
+(jobs a streaming query runs on its own thread are not in it). Each
+operator of the formatted physical plan is counted once, in the initial
+plan (``plan``) and in the final adaptive plan of the untimed run
+(``final_plan``): only the final plan shows what adaptive execution made
+of it (``ReusedExchange``, ``TableCacheQueryStage``, ``InMemoryRelation``).
 
 The report gives, per query, each arm's per-pair min time (build +
-exec), the medians, A's quartiles, B's wins, the job counts, the plan
-operators whose counts differ and whether the result hashes match. The
-verdict (see ``verdict``) needs both nine tenths of the pair wins and a
-median gap wider than A's spread. The full record is the last stdout
-line, as JSON.
+exec), the medians, A's quartiles, B's wins, the job counts, the
+initial- and final-plan operators whose counts differ and whether the
+result hashes match. The verdict (see ``verdict``) needs both nine
+tenths of the pair wins and a median gap wider than A's spread. The full
+record is the last stdout line, as JSON.
 
 This module imports nothing from the engine package at import time:
 a child must import only its own arm's package, and bench.py imports
@@ -60,7 +63,10 @@ REPO = os.path.dirname(TOOLS)
 RUNS = 3
 # A formatted plan's detail headers: "(1) Scan parquet ", "(7) Exchange",
 # "(5) ReusedExchange [Reuses operator id: 4]".
-_PLAN_OP = re.compile(r"^\(\d+\) ([^\[]+?)\s*(?:\[.*)?$")
+_PLAN_OP = re.compile(r"^\((\d+)\) ([^\[]+?)\s*(?:\[.*)?$")
+# A node of a formatted plan's tree: "+- * HashAggregate (17)",
+# "+- ShuffleQueryStage (24), Statistics(sizeInBytes=...)".
+_TREE_ID = re.compile(r" \((\d+)\)(?:,|$)", re.M)
 
 
 def warm_streaming(spark) -> None:
@@ -157,15 +163,24 @@ def parse_arm(spec: str) -> dict:
     return arm
 
 
-def _plan_ops(df) -> dict:
+def _plan_ops(df, final: bool = False) -> dict:
+    """Operator name -> count in ``df``'s formatted physical plan. Once
+    an action has run on ``df``, the plan is its final adaptive plan with
+    the initial plan under it; ``final`` counts the operators of the
+    final plan alone."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
+    text = buf.getvalue()
+    ids = None
+    if final and "== Final Plan ==" in text:
+        tree = text.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+        ids = set(_TREE_ID.findall(tree))
     ops: dict[str, int] = {}
-    for line in buf.getvalue().splitlines():
+    for line in text.splitlines():
         m = _PLAN_OP.match(line)
-        if m:
-            ops[m.group(1)] = ops.get(m.group(1), 0) + 1
+        if m and (ids is None or m.group(1) in ids):
+            ops[m.group(2)] = ops.get(m.group(2), 0) + 1
     return ops
 
 
@@ -216,7 +231,8 @@ def _measure(spark, fn, sf_dir: str, group: str) -> dict:
     plan = _plan_ops(df)  # before execution: the initial plan only, once
     cols = df.columns
     rows = [tuple(d[c] for c in cols) for d in df.toArrow().to_pylist()]
-    rec = {"hash": table_hash(cols, rows), "rows": len(rows), "plan": plan, "runs": []}
+    rec = {"hash": table_hash(cols, rows), "rows": len(rows), "plan": plan,
+           "final_plan": _plan_ops(df, final=True), "runs": []}
     for i in range(RUNS):
         spark.catalog.clearCache()
         sc.setJobGroup(f"{group}#{i}", group)
@@ -288,7 +304,8 @@ def _checkout(ref: str):
 
 def summarize(pairs: list[dict], name: str) -> dict:
     """One query's report over all pairs: per-pair min times, verdict,
-    job counts, differing plan operators and the hash match."""
+    job counts, differing initial- and final-plan operators and the hash
+    match."""
     errors = [f"pair {i} {s}: {p[s]['queries'][name]['error']}"
               for i, p in enumerate(pairs) for s in "AB" if "error" in p[s]["queries"][name]]
     ok = [p for p in pairs if not any("error" in p[s]["queries"][name] for s in "AB")]
@@ -303,10 +320,11 @@ def summarize(pairs: list[dict], name: str) -> dict:
         out["verdict"] = "error"
     for k in ("jobs", "stages", "tasks"):
         out[k] = {s: statistics.median_low(q[k] for q in recs[s]) for s in "AB"}
-    plan_a, plan_b = recs["A"][0]["plan"], recs["B"][0]["plan"]
-    out["plan_diff"] = {op: [plan_a.get(op, 0), plan_b.get(op, 0)]
-                        for op in sorted(set(plan_a) | set(plan_b))
-                        if plan_a.get(op, 0) != plan_b.get(op, 0)}
+    for key in ("plan", "final_plan"):
+        plan_a, plan_b = recs["A"][0][key], recs["B"][0][key]
+        out[f"{key}_diff"] = {op: [plan_a.get(op, 0), plan_b.get(op, 0)]
+                              for op in sorted(set(plan_a) | set(plan_b))
+                              if plan_a.get(op, 0) != plan_b.get(op, 0)}
     out["hash_match"] = len({q["hash"] for s in "AB" for q in recs[s]}) == 1
     return out
 
@@ -323,9 +341,10 @@ def _report(name: str, q: dict) -> None:
     print(f"  B won {q['b_wins']}/{q['pairs']} (A won {q['a_wins']}); jobs "
           f"{q['jobs']['A']} -> {q['jobs']['B']}, stages {q['stages']['A']} -> "
           f"{q['stages']['B']}, tasks {q['tasks']['A']} -> {q['tasks']['B']}")
-    diff = ", ".join(f"{op} {a} -> {b}" for op, (a, b) in q["plan_diff"].items())
-    print(f"  plan operators differing: {diff or 'none'}; result hashes "
-          f"{'match' if q['hash_match'] else 'DIFFER'}")
+    for key, label in (("plan_diff", "plan"), ("final_plan_diff", "final plan")):
+        diff = ", ".join(f"{op} {a} -> {b}" for op, (a, b) in q[key].items())
+        print(f"  {label} operators differing: {diff or 'none'}")
+    print(f"  result hashes {'match' if q['hash_match'] else 'DIFFER'}")
 
 
 def main(argv: list[str] | None = None) -> int:
