@@ -41,177 +41,34 @@ from quantum_rag_data_pipeline_spark.session import get_spark
 HEADLINE = list(QUERIES)
 
 
-# Anchor-floor policy (BASELINE.md round-10): the warm-retry suspicion
-# bar judges against max(recorded_min, ANCHOR_FLOOR). Imported from the
-# anchors owner so all three mirrors share one value.
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-from bench_anchors import ANCHOR_FLOOR, era_seg_summary  # noqa: E402
-# the one session warm-up; perfbench imports warm_streaming from here
-from ab import warm_session, warm_streaming  # noqa: E402,F401
+# the one session warm-up and the era probe; perfbench imports
+# warm_streaming from here
+from ab import era_probe, warm_session, warm_streaming  # noqa: E402,F401
 
 
-def fault_probe_gbps(size_mb: int = 128, reps: int = 3) -> float:
-    """First-touch page-fault throughput probe (GB/s), median of
-    ``reps`` fresh-mmap touch loops (~1 s total at a healthy era).
-
-    Round 11 established that this VM's dominant noise source is the
-    KERNEL's fresh-page fault rate, which swings by era (measured
-    55 s/GB -> 9.3 s/GB within one day; BASELINE.md round-11) and
-    uniformly drags every query that grows worker RSS. Rounds 6-11 each
-    spent a triage session re-litigating era drift from timings alone;
-    recording the era WITH the run makes the next drift self-labeling:
-    a slow bench with a slow probe is the documented VM era, a slow
-    bench with a healthy probe is a real regression. Each rep maps a
-    fresh anonymous region and touches one byte per 4 KiB page (the
-    fault is the cost being measured; the ~32k-iteration Python loop
-    overhead is ~10 ms against a >=100 ms fault bill). Median of 3
-    rejects the first-rep page-table warm-up skew observed at
-    calibration (0.53/0.93/1.12 GB/s on a quiet VM; re-touch control
-    10 GB/s)."""
-    import mmap
-
-    samples = []
-    for _ in range(reps):
-        n = size_mb << 20
-        buf = mmap.mmap(-1, n)
-        mv = memoryview(buf)
-        t0 = time.perf_counter()
-        for off in range(0, n, 4096):
-            mv[off] = 1
-        dt = time.perf_counter() - t0
-        mv.release()
-        buf.close()
-        samples.append((size_mb / 1024.0) / dt)
-    return round(sorted(samples)[len(samples) // 2], 4)
-
-
-def era_probe() -> dict:
-    """Three-dimension VM-era vector, ~4 s total: the round-12 bench
-    (342 s, 8 violations, ALL on round-untouched queries) ran under a
-    HEALTHY fault probe, proving one dimension can't label the era —
-    that day's degraded dimension was disk (write+fsync swinging
-    0.02-0.4 GB/s within a minute), which the fault probe is blind to.
-
-    - ``fault_gbps``: first-touch page-fault throughput (the round-11
-      mechanism; healthy ~0.9-1.5, degraded era ~0.02-0.1).
-    - ``cpu_gflops``: aggregate float64 matmul throughput across 32
-      single-BLAS-thread processes (host CPU oversubscription shows
-      here first; healthy ~1000, quiet calibration 2026-08-16).
-      Subprocess-isolated so OPENBLAS_NUM_THREADS=1 binds before numpy
-      loads and no fork touches a live py4j gateway.
-    - ``disk_wgbps``: median of three 32 MB write+fsync rounds on the
-      Spark scratch filesystem (shuffle files, drain parquet, state
-      stores all land there; healthy >=0.4, contended ~0.02).
-
-    bench_compare flags a run ERA-DEGRADED naming WHICH dimension(s)
-    fell below half their reference (bench_anchors.ERA_REF), so drift
-    triage starts from a mechanism instead of re-deriving one from
-    timing shapes (the round-6..12 loop)."""
-    import subprocess
-
-    try:
-        out = {"fault_gbps": fault_probe_gbps()}
-    except Exception:  # noqa: BLE001 — probe must never fail the bench
-        # mmap of the 128 MB probe region can ENOMEM on a pressured VM;
-        # a missing era label must not cost the run its timings (the
-        # round-3 lesson, applied to the probes too).
-        out = {"fault_gbps": None}
-    cpu_script = (
-        "import multiprocessing as mp, time\n"
-        "def w(_):\n"
-        "    import numpy as np, time\n"
-        "    a = np.arange(256*256, dtype='float64').reshape(256,256)/65536.\n"
-        "    b = a.T.copy(); a @ b\n"
-        "    t0 = time.perf_counter(); n = 0\n"
-        "    while time.perf_counter() - t0 < 0.4:\n"
-        "        a @ b; n += 1\n"
-        "    return n * 2 * 256**3 / (time.perf_counter() - t0)\n"
-        "if __name__ == '__main__':\n"
-        "    with mp.Pool(32) as p:\n"
-        "        r = sorted(p.map(w, range(32)))\n"
-        "    print(round(sum(r) / 1e9, 1), round(r[0] / 1e9, 1))\n"
-    )
-    try:
-        env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1")
-        r = subprocess.run([sys.executable, "-c", cpu_script], env=env,
-                           capture_output=True, text=True, timeout=60)
-        if r.returncode != 0:
-            # fail-open stays (None, never abort the bench) but leave the
-            # subprocess's own diagnostics behind: a persistently-None
-            # dimension with no stderr trail is undebuggable (r12
-            # advisor). One clean line, then skip the parse — letting the
-            # unpack throw would add a second line blaming the wrong
-            # proximate cause (round-13 self-review).
-            tail = (r.stderr or "").strip().splitlines()
-            print(f"era_probe: cpu probe exited rc={r.returncode}: "
-                  f"{tail[-1] if tail else '(no stderr)'}", file=sys.stderr)
-            out["cpu_gflops"] = None
-            out["cpu_gflops_min"] = None
-        else:
-            agg, worst = r.stdout.split()
-            # the straggler minimum matters as much as the aggregate: a
-            # 32-task Spark stage's wall is its SLOWEST task, so a few
-            # host-throttled vCPUs (measured round 12: workers at 6-20
-            # GFLOP/s while siblings ran 40) drag every wide stage
-            # without moving the aggregate much.
-            out["cpu_gflops"] = float(agg)
-            out["cpu_gflops_min"] = float(worst)
-    except Exception as exc:  # noqa: BLE001 — probe must never fail the bench
-        print(f"era_probe: cpu probe failed: {type(exc).__name__}: "
-              f"{str(exc)[:160]}", file=sys.stderr)
-        out["cpu_gflops"] = None
-        out["cpu_gflops_min"] = None
-    try:
-        import tempfile
-
-        # Probe the filesystem Spark's scratch I/O actually lands on:
-        # drain parquet, landing zones, and stream state all live under
-        # artifact_root() (paths.py — honors XDG_CACHE_HOME/TMPDIR the
-        # same way spark.local.dir's java.io.tmpdir default does in this
-        # rig), so the disk_wgbps label attributes degradation to the
-        # right disk even when TMPDIR points elsewhere (r12 advisor:
-        # tempfile.gettempdir() could measure a different mount than the
-        # one the queries write to).
-        try:
-            from quantum_rag_data_pipeline_spark.paths import artifact_root
-            probe_dir = artifact_root()
-        except Exception:  # noqa: BLE001 — probe must never fail the bench
-            probe_dir = tempfile.gettempdir()
-        buf = b"\xa5" * (32 << 20)
-        samples = []
-        for _ in range(3):
-            with tempfile.NamedTemporaryFile(dir=probe_dir) as f:
-                t0 = time.perf_counter()
-                f.write(buf)
-                f.flush()
-                os.fsync(f.fileno())
-                samples.append((32 / 1024.0) / (time.perf_counter() - t0))
-        out["disk_wgbps"] = round(sorted(samples)[1], 4)
-        # Which mount the number describes (round-13 advisor): ERA_REF
-        # and all pre-r13 anchor stamps were measured against the bare
-        # tempdir; r13 moved the probe to the Spark scratch root. The
-        # two coincide today, but if XDG_CACHE_HOME/TMPDIR ever diverge,
-        # a run-vs-anchor disk ratio would silently compare different
-        # disks — the recorded target makes that detectable in the data.
-        out["disk_probe_path"] = probe_dir
-    except Exception:  # noqa: BLE001
-        out["disk_wgbps"] = None
-    return out
+def suspect(runs: list[float]) -> bool:
+    """Whether a query's timing needs a warm re-run: its two fastest runs
+    disagree by more than 1.5x and by more than 0.5 s, so the kept
+    minimum has no second reading behind it. On the paired runs this
+    flags a pair one of whose runs caught a VM stall; on the pair plus
+    its re-runs it stays true until a re-run confirms the minimum. The
+    0.5 s floor keeps sub-second jitter from triggering re-runs."""
+    lo, hi = sorted(runs)[:2]
+    return hi > 1.5 * lo and hi - lo > 0.5
 
 
 def build_compact(total: float, timings: dict, errors: dict,
                   retried: list, sf: float, budget: int = 1700,
                   total_pre_retry: float | None = None,
-                  era: dict | None = None,
-                  era_timeline: list | None = None) -> dict:
+                  era: dict | None = None) -> dict:
     """The FINAL stdout line the driver records as BENCH_r*.json: total
     plus as many of the SLOWEST per-query timings as fit a hard byte
     budget (the round-2 line with 99 timings blew past the driver's
     last-2000-chars capture and the bench came back unparsed), plus the
     warm_retry_minima marker for the listed names — the slowest queries
-    are exactly the warm-retried ones, and without the marker the
-    driver-record path of bench_anchors would ratchet anchors down on
-    systematically easier warm measurements (round-7 advisor item).
+    are exactly the warm-retried ones, and a reader of the record must
+    be able to tell a warm minimum from a paired cold-order run.
     Factored out of main so the budget/trim interplay is unit-testable
     (tests/test_bench_compact.py)."""
     compact = {
@@ -236,11 +93,6 @@ def build_compact(total: float, timings: dict, errors: dict,
                            if isinstance(vec, dict) else vec)
                     for side, vec in era.items()}}
            if isinstance(era, dict) else {}),
-        # per-segment degraded-dim labels (~80 bytes): the mid-run
-        # probes' verdicts survive on the driver line even though the
-        # raw timeline lives only in the overwritten full dump
-        **({"era_seg": seg} if (seg := era_seg_summary(era_timeline))
-           else {}),
         "n_errors": len(errors),
         "queries_full": "BENCH_FULL.json",
         "sf": sf,
@@ -250,10 +102,10 @@ def build_compact(total: float, timings: dict, errors: dict,
         if len(json.dumps(compact, separators=(",", ":"))) > budget:
             del compact["queries"][name]
             break
-    # Only names actually present in the compact queries map matter to
-    # the anchor consumer; if the marker pushes past the byte budget,
-    # drop the CHEAPEST listed queries (keep the slow ones — they are
-    # the line's point) until it fits.
+    # Only names actually present in the compact queries map matter;
+    # if the marker pushes past the byte budget, drop the CHEAPEST
+    # listed queries (keep the slow ones — they are the line's point)
+    # until it fits.
     compact["warm_retry_minima"] = sorted(set(retried) & set(compact["queries"]))
     while (len(json.dumps(compact, separators=(",", ":"))) > budget
            and compact["queries"]):
@@ -275,19 +127,9 @@ def main() -> None:
     warm_session(spark, sf_dir)
 
     timings: dict[str, float] = {}
+    runs_of: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
-    # Mid-run era probes (round-13 judge item 4): the r13 driver run's
-    # disk probe went 0.096 -> 0.366 GB/s across a ~20-minute bench — a
-    # single pre/post pair cannot say WHICH queries ran degraded. Probe
-    # every ~80 completed queries so every query has a bracketing pair;
-    # bench_compare attributes each violation to its LOCAL era window
-    # instead of the global min. ~4 s per probe, never inside a timed
-    # region, ~16 s total against a ~300 s bench.
-    PROBE_EVERY = 80
-    seq: list[str] = []  # run order, for timeline attribution
-    era_timeline: list[dict] = [{"n_done": 0, "probe": probe_pre}]
     for name in HEADLINE:
-        seq.append(name)
         # A failing query must never abort the bench (round 3: one
         # AnalysisException killed the whole run and the round recorded no
         # timings at all). Record the error, keep timing everything else.
@@ -312,6 +154,7 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         if runs:
             timings[name] = round(min(runs), 3)
+            runs_of[name] = runs
         # Periodic hygiene: drop cached plans + nudge the JVM GC so
         # ContextCleaner reclaims out-of-scope localCheckpoint blocks
         # (measured round 2: dedup queries read 5-8x slower mid-bench
@@ -325,54 +168,18 @@ def main() -> None:
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             time.sleep(1.5)
-        done = len(timings) + len(errors)
-        if done - era_timeline[-1]["n_done"] >= PROBE_EVERY:
-            era_timeline.append({"n_done": done, "probe": era_probe()})
 
-    # Retry pass (round 6): min-of-2 cannot reject a VM stall that spans
-    # BOTH paired runs, and the rotation prefix puts 50 queries at the
-    # cold start of the session — measured: a clean 310 s full bench
-    # still had one contiguous 6-query stall window and 4 prefix
-    # cold-start exceedances, all of which a single later re-run erased.
-    # Re-run only the suspicious queries (> 2x anchor and > 0.5 s over),
-    # once, warm, and keep the min. Anchors are advisory here — no
-    # anchors file, no retry pass.
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "ANCHORS.json")) as f:
-            anchors = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        anchors = {}
-    # Round 8 lowered the suspicion bar from 2.0x to 1.5x: it now matches
-    # bench_compare's WARNING tier, so the driver's recorded numbers
-    # carry few phantom warnings — rounds 6-8 each spent a triage session
-    # proving the 1.5-1.9x tier was VM drift (r7: nine suspects, all
-    # cleared quiet). Warm minima remain marked (warm_retry_minima) and
-    # excluded from anchor ratcheting, so this cannot soften the anchors;
-    # it only de-noises the record the judge reads.
-    # Effective anchor = max(recorded, 1.0 s): the anchor-floor policy
-    # (BASELINE.md round-10) — sub-second recorded minima are JIT-hot-era
-    # artifacts that manufacture phantom retries/warnings once the
-    # rotation moves the query to the cold prefix. Mirrors
-    # tools/bench_compare.py --anchor-floor.
-    # Suspicion matches BOTH of bench_compare's violation tiers: the
-    # floored warning bar AND the raw-anchor tier (8x raw + >1 s over) —
-    # without the second clause a sub-second-anchor query stalling to
-    # ~1.3 s was never retried yet still violated the raw tier (seen in
-    # the first round-10 full-gate run: three such, all 0.3-1.3x quiet).
-    suspicious = [n for n, sec in timings.items()
-                  if n in anchors and (
-                      (sec > 1.5 * max(anchors[n], ANCHOR_FLOOR)
-                       and sec - max(anchors[n], ANCHOR_FLOOR) > 0.5)
-                      or (sec > 8.0 * anchors[n] and sec - anchors[n] > 1.0))]
+    # Retry pass (round 6): min-of-2 cannot tell a clean run from one
+    # whose faster half was itself slowed by a VM stall, and the
+    # rotation prefix puts 50 queries at the cold start of the session.
+    # Re-run the suspects (see ``suspect``) warm, up to twice — round 7
+    # caught a stall window long enough to cover a query's paired runs
+    # AND its first re-run — keep the min, and stop as soon as a re-run
+    # confirms the minimum.
     retried = []  # names whose kept timing came from the warm re-run
     pre_retry = {}  # name -> original paired-run minimum it replaced
-    for name in suspicious:
-        # Up to TWO warm re-runs: round 7 caught a stall window long
-        # enough to cover a query's paired runs AND its single retry
-        # (16.7 s recorded for a query that isolates at 1.2 s). Stop as
-        # soon as the timing drops under the suspicion bar.
-        for _ in range(2):
+    for name, runs in runs_of.items():
+        while suspect(runs) and len(runs) < 4:  # the pair + two re-runs
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             try:
@@ -381,22 +188,14 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — keep the original timing
                 break
             warm = time.perf_counter() - t0
+            runs.append(warm)
             if warm < timings[name]:
                 if name not in retried:
                     retried.append(name)
                     pre_retry[name] = timings[name]
                 timings[name] = round(warm, 3)
-            eff = max(anchors.get(name, 0.0), ANCHOR_FLOOR)
-            raw = anchors.get(name, 0.0)
-            floored_ok = (timings[name] <= 1.5 * eff
-                          or timings[name] - eff <= 0.5)
-            raw_ok = (timings[name] <= 8.0 * raw
-                      or timings[name] - raw <= 1.0)
-            if floored_ok and raw_ok:
-                break
 
     probe_post = era_probe()
-    era_timeline.append({"n_done": len(seq), "probe": probe_post})
 
     total = round(sum(timings.values()), 3)
     # Comparability control (round-9 verdict item 5): the warm-retry
@@ -417,23 +216,12 @@ def main() -> None:
         "errors": errors,
         # Queries whose recorded timing is a fully-warm retry minimum
         # (JVM hot, shared artifacts materialized) rather than a paired
-        # cold-prefix run — anchor consumers (bench_anchors.py --merge)
-        # can tell the two apart instead of silently ratcheting anchors
-        # down on systematically easier measurements.
+        # cold-order run.
         "warm_retry_minima": sorted(retried),
-        # First-touch page-fault era, before and after the run (GB/s;
-        # see fault_probe_gbps). bench_compare reads this to annotate
-        # era-degraded runs instead of re-triaging them from timings.
+        # The VM era before and after the run (see ab.era_probe): a
+        # slow run with degraded probes is the VM, a slow run with
+        # healthy probes is the code.
         "era_probe": {"pre": probe_pre, "post": probe_post},
-        # Per-segment probes (pre + every ~80 queries + post) and the
-        # run order they bracket: bench_compare/bench_anchors attribute
-        # each query to the per-dim MIN of its two bracketing probes
-        # (tools/bench_anchors.local_era). Warm-retry minima run at the
-        # session tail, but those are already excluded from anchoring,
-        # and for violation triage the paired cold run's window is the
-        # one that matters.
-        "era_timeline": era_timeline,
-        "query_seq": seq,
         "sf": float(sf),
     }
     # Full per-query detail goes to a file (and an early stdout line for
@@ -449,8 +237,7 @@ def main() -> None:
 
     print(json.dumps(build_compact(total, timings, errors, retried, float(sf),
                                    total_pre_retry=total_pre_retry,
-                                   era=full["era_probe"],
-                                   era_timeline=era_timeline),
+                                   era=full["era_probe"]),
                      separators=(",", ":")))
 
 

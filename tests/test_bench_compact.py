@@ -1,10 +1,9 @@
 """bench.py's compact stdout line is the driver's BENCH_r*.json record —
 its byte budget, slowest-first selection, and warm-retry marker decide
-what the anchor ratchet ever sees. Round 7's advisor found the
-driver-record path could ratchet anchors onto warm-retry minima because
-the compact line omitted the marker; these tests pin the fixed contract:
-marker present, restricted to listed names, budget never exceeded, and
-the slowest queries always preferred when trimming.
+what a reader of the record can tell apart. These tests pin the
+contract: marker present, restricted to listed names, budget never
+exceeded, and the slowest queries always preferred when trimming; and
+the retry pass's suspicion rule.
 """
 
 import json
@@ -73,27 +72,6 @@ def test_empty_retry_list_yields_empty_marker():
     assert c["queries"] == {"a": 1.0}
 
 
-def test_anchor_collector_strips_marker_in_driver_branch(tmp_path):
-    """End-to-end with tools/bench_anchors._timings: a driver-shaped
-    record whose slowest query is a warm minimum must not contribute
-    that query to the ratchet, while its clean names still do."""
-    import os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import bench_anchors
-
-    rec = {
-        "sf": 0.1,
-        "parsed": {
-            "queries": {"slow_warm": 2.0, "clean": 1.0},
-            "warm_retry_minima": ["slow_warm"],
-        },
-    }
-    p = tmp_path / "BENCH_r99.json"
-    p.write_text(json.dumps(rec))
-    out = bench_anchors._timings(str(p))
-    assert out == {"clean": 1.0}
-
-
 def test_pre_retry_total_travels_on_compact_line():
     """Round-10 comparability field: when warm retries replaced timings,
     the compact line must carry value_pre_retry (the total computed from
@@ -120,20 +98,25 @@ def test_compact_era_drops_string_annotations():
     assert c["era"]["post"] == {"disk_wgbps": 0.5, "fault_gbps": None}
 
 
-def test_compact_carries_era_segment_labels():
-    """Round-14: the driver line carries ~80-byte per-segment degraded
-    labels derived from the mid-run probe timeline (the raw timeline
-    only lives in the overwritten full dump). Healthy probes read
-    'ok'; degraded ones name their dims; no timeline -> no field."""
-    healthy = {"fault_gbps": 1.2, "cpu_gflops": 1100.0,
-               "cpu_gflops_min": 25.0, "disk_wgbps": 0.5}
-    degraded = {**healthy, "disk_wgbps": 0.05, "cpu_gflops_min": 4.0}
-    tl = [{"n_done": 0, "probe": healthy},
-          {"n_done": 80, "probe": degraded},
-          {"n_done": 160, "probe": healthy}]
-    c = BENCH.build_compact(1.0, {"q": 1.0}, {}, [], 0.1, era_timeline=tl)
-    assert c["era_seg"] == [[0, "ok"],
-                            [80, "cpu_gflops_min|disk_wgbps"],
-                            [160, "ok"]]
-    c2 = BENCH.build_compact(1.0, {"q": 1.0}, {}, [], 0.1)
-    assert "era_seg" not in c2
+def test_compact_keys_are_the_driver_contract():
+    """The compact line's key set, with every optional field present."""
+    era = {"pre": {"disk_wgbps": 0.4}, "post": {"disk_wgbps": 0.5}}
+    c = BENCH.build_compact(1.0, {"q": 1.0}, {}, ["q"], 0.1,
+                            total_pre_retry=1.5, era=era)
+    assert set(c) == {"metric", "value", "unit", "queries", "n_queries",
+                      "value_pre_retry", "era", "n_errors", "queries_full",
+                      "sf", "warm_retry_minima"}
+
+
+def test_suspect_retries_a_stalled_pair_and_not_a_steady_one():
+    """The retry pass's anchor-free rule: a query is re-run when its two
+    fastest runs differ by more than 1.5x and more than 0.5 s."""
+    suspect = BENCH.suspect
+    assert suspect([1.0, 5.0]) and suspect([5.0, 1.0])  # one run stalled
+    assert not suspect([1.0, 1.1])  # steady pair
+    assert not suspect([0.1, 0.5])  # 5x, but sub-second jitter
+    assert not suspect([4.0, 5.5])  # 1.4 s apart, but within 1.5x
+    # a re-run that confirms the minimum ends the retries; one far under
+    # the pair shows its minimum was slowed too, and needs confirming
+    assert not suspect([1.0, 5.0, 1.2])
+    assert suspect([3.0, 6.0, 1.0])

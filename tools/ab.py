@@ -16,7 +16,7 @@ and the core count from ``$SPARK_GRAFT_CPUS``, as in bench.py::
         dbscan_core_border_noise semdedup_prune
 
 Each pair runs one child process per arm, A first in even pairs and B
-first in odd ones, after one ``bench.era_probe()``. A child starts a
+first in odd ones, after one ``era_probe()``. A child starts a
 session, runs ``warm_session``, then per query: one untimed run that
 collects the result and hashes it with ``oracle_check.table_hash``;
 then three noop-sink runs, cache cleared before each, timing the
@@ -36,9 +36,10 @@ result hashes match. The verdict (see ``verdict``) needs both nine
 tenths of the pair wins and a median gap wider than A's spread. The full
 record is the last stdout line, as JSON.
 
-This module imports nothing from the engine package at import time:
-a child must import only its own arm's package, and bench.py imports
-``warm_session`` / ``warm_streaming`` from here.
+This module imports nothing from the engine package at import time,
+and the parent process imports nothing from it at all: a child must
+import only its own arm's package. bench.py imports ``warm_session``,
+``warm_streaming`` and ``era_probe`` from here.
 """
 
 from __future__ import annotations
@@ -127,6 +128,128 @@ def warm_session(spark, sf_dir: str) -> None:
     spark.range(0, 32, 1, 32).mapInPandas(_py_warm, "id long") \
         .write.mode("overwrite").format("noop").save()
     warm_streaming(spark)
+
+
+def fault_probe_gbps(size_mb: int = 128, reps: int = 3) -> float:
+    """First-touch page-fault throughput probe (GB/s), median of
+    ``reps`` fresh-mmap touch loops (~1 s total at a healthy era).
+
+    Round 11 established that this VM's dominant noise source is the
+    KERNEL's fresh-page fault rate, which swings by era (measured
+    55 s/GB -> 9.3 s/GB within one day; BASELINE.md round-11) and
+    uniformly drags every query that grows worker RSS, so a run records
+    it next to its timings. Each rep maps a fresh anonymous region and
+    touches one byte per 4 KiB page (the fault is the cost being
+    measured; the ~32k-iteration Python loop overhead is ~10 ms against
+    a >=100 ms fault bill). Median of 3 rejects the first-rep page-table
+    warm-up skew observed at calibration (0.53/0.93/1.12 GB/s on a quiet
+    VM; re-touch control 10 GB/s)."""
+    import mmap
+
+    samples = []
+    for _ in range(reps):
+        n = size_mb << 20
+        buf = mmap.mmap(-1, n)
+        mv = memoryview(buf)
+        t0 = time.perf_counter()
+        for off in range(0, n, 4096):
+            mv[off] = 1
+        dt = time.perf_counter() - t0
+        mv.release()
+        buf.close()
+        samples.append((size_mb / 1024.0) / dt)
+    return round(sorted(samples)[len(samples) // 2], 4)
+
+
+def era_probe() -> dict:
+    """Three-dimension VM-era vector, ~4 s total. One dimension cannot
+    label the era: the round-12 bench ran slow under a healthy fault
+    probe, and that day's degraded dimension was disk (write+fsync
+    swinging 0.02-0.4 GB/s within a minute).
+
+    - ``fault_gbps``: first-touch page-fault throughput (the round-11
+      mechanism; healthy ~0.9-1.5, degraded era ~0.02-0.1).
+    - ``cpu_gflops``: aggregate float64 matmul throughput across 32
+      single-BLAS-thread processes (host CPU oversubscription shows
+      here first), and ``cpu_gflops_min``, the slowest of them.
+      Subprocess-isolated so OPENBLAS_NUM_THREADS=1 binds before numpy
+      loads and no fork touches a live py4j gateway.
+    - ``disk_wgbps``: median of three 32 MB write+fsync rounds on the
+      filesystem of the Spark scratch roots (``paths.artifact_root``
+      lives under ``$XDG_CACHE_HOME`` or the temp dir: shuffle files,
+      drain parquet and state stores land there; healthy >=0.4,
+      contended ~0.02). ``disk_probe_path`` names the directory.
+
+    A dimension that cannot be measured reads None: a probe never fails
+    the run it labels."""
+    import subprocess
+    import tempfile
+
+    try:
+        out = {"fault_gbps": fault_probe_gbps()}
+    except Exception:  # noqa: BLE001 — probe must never fail the run
+        # mmap of the 128 MB probe region can ENOMEM on a pressured VM
+        out = {"fault_gbps": None}
+    cpu_script = (
+        "import multiprocessing as mp, time\n"
+        "def w(_):\n"
+        "    import numpy as np, time\n"
+        "    a = np.arange(256*256, dtype='float64').reshape(256,256)/65536.\n"
+        "    b = a.T.copy(); a @ b\n"
+        "    t0 = time.perf_counter(); n = 0\n"
+        "    while time.perf_counter() - t0 < 0.4:\n"
+        "        a @ b; n += 1\n"
+        "    return n * 2 * 256**3 / (time.perf_counter() - t0)\n"
+        "if __name__ == '__main__':\n"
+        "    with mp.Pool(32) as p:\n"
+        "        r = sorted(p.map(w, range(32)))\n"
+        "    print(round(sum(r) / 1e9, 1), round(r[0] / 1e9, 1))\n"
+    )
+    try:
+        env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1")
+        r = subprocess.run([sys.executable, "-c", cpu_script], env=env,
+                           capture_output=True, text=True, timeout=60)
+        if r.returncode != 0:
+            # leave the subprocess's own diagnostics behind: a
+            # persistently-None dimension with no stderr trail is
+            # undebuggable
+            tail = (r.stderr or "").strip().splitlines()
+            print(f"era_probe: cpu probe exited rc={r.returncode}: "
+                  f"{tail[-1] if tail else '(no stderr)'}", file=sys.stderr)
+            out["cpu_gflops"] = None
+            out["cpu_gflops_min"] = None
+        else:
+            agg, worst = r.stdout.split()
+            # the straggler minimum matters as much as the aggregate: a
+            # 32-task Spark stage's wall is its SLOWEST task, so a few
+            # host-throttled vCPUs (measured round 12: workers at 6-20
+            # GFLOP/s while siblings ran 40) drag every wide stage
+            # without moving the aggregate much.
+            out["cpu_gflops"] = float(agg)
+            out["cpu_gflops_min"] = float(worst)
+    except Exception as exc:  # noqa: BLE001 — probe must never fail the run
+        print(f"era_probe: cpu probe failed: {type(exc).__name__}: "
+              f"{str(exc)[:160]}", file=sys.stderr)
+        out["cpu_gflops"] = None
+        out["cpu_gflops_min"] = None
+    try:
+        # the base of paths.artifact_root(), computed here because this
+        # module must not import the engine package
+        probe_dir = os.environ.get("XDG_CACHE_HOME") or tempfile.gettempdir()
+        buf = b"\xa5" * (32 << 20)
+        samples = []
+        for _ in range(3):
+            with tempfile.NamedTemporaryFile(dir=probe_dir) as f:
+                t0 = time.perf_counter()
+                f.write(buf)
+                f.flush()
+                os.fsync(f.fileno())
+                samples.append((32 / 1024.0) / (time.perf_counter() - t0))
+        out["disk_wgbps"] = round(sorted(samples)[1], 4)
+        out["disk_probe_path"] = probe_dir
+    except Exception:  # noqa: BLE001 — probe must never fail the run
+        out["disk_wgbps"] = None
+    return out
 
 
 def verdict(a: list[float], b: list[float]) -> dict:
@@ -368,9 +491,6 @@ def main(argv: list[str] | None = None) -> int:
             ap.error(f"{ref!r} is not a commit")
     # a SIGTERM unwinds through the finally blocks that remove worktrees
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
-    sys.path.insert(0, REPO)
-    from bench import era_probe
-
     with contextlib.ExitStack() as stack:
         roots = {}
         for arm in arms.values():

@@ -158,13 +158,9 @@ def main() -> int:
         runs = int(sys.argv[sys.argv.index("--runs") + 1])
 
     from bench import era_probe
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from bench_anchors import ERA_REF, degraded_era_dims
 
     probe = era_probe()
-    bad = degraded_era_dims(probe)
-    print(f"era: probe {probe} vs refs {ERA_REF} "
-          f"({'DEGRADED on ' + ','.join(bad) if bad else 'healthy'})")
+    print(f"era: probe {probe}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from quantum_rag_data_pipeline_spark.queries import QUERIES

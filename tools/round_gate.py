@@ -1,183 +1,157 @@
 """One-command round gate: every per-round check in one exit code.
 
-    python tools/round_gate.py                 # all gates, in order
-    python tools/round_gate.py --skip-bench    # skip the ~4 min bench
-    python tools/round_gate.py --skip-pytest   # skip the ~10 min suite
-    python tools/round_gate.py --wait-healthy  # poll the era probe and
-                                               # start only in a healthy
-                                               # VM window (<=50 min)
+    python tools/round_gate.py --base REF [QUERY...]
+    python tools/round_gate.py --base REF --skip-bench   # skip the ~4 min bench
+    python tools/round_gate.py --skip-ab --skip-pytest   # no base ref needed
+
+``REF`` is the round's base commit. The ``ab`` gate A/B-times the
+queries the round touched against it, with ``$SPARK_GRAFT_SF_DIR`` as
+the scale-factor directory (required unless ``ab`` is skipped). A touched
+query is a ``@query`` function whose lines the ``git diff -U0 REF`` of
+``quantum_rag_data_pipeline_spark/queries/`` adds, changes or deletes
+(see ``touched_queries``); the ``QUERY`` names are added to that set.
 
 Runs, in this order (fail-fast OFF — all gates always run so one broken
 gate doesn't hide another; exit code is nonzero if ANY failed):
 
 1. bench.py                               (full sf0.1 bench -> BENCH_FULL)
-2. tools/bench_compare.py                 (anchor gate on that run)
+2. tools/ab.py REF . <touched queries>    (interleaved A/B, see ``judge``)
 3. pytest tests/ -q                       (full suite)
 4. tools/oracle_check.py sf0.01           (327-query DuckDB oracle sweep)
 5. tools/verify_ledger.py --check         (rotation audit)
 6. tools/explain_audit.py                 (plan-shape audit, 0 flags)
 7. tools/replication_coverage.py          (0 unreplicated)
 
-Bench and compare run FIRST so the timing gates see the quietest VM the
-gate can offer (fresh JVM, no residual load). The original order ran
-them after ~25 min of pytest+oracle saturation and produced three
-load-shadow raw-tier violations that all quiet-triaged clean — the
-warm-retry pass cannot de-noise a shadow it runs inside of.
+The timing gates run FIRST so they see the quietest VM the gate can
+offer (fresh JVM, no residual load): run after ~25 min of pytest+oracle
+saturation, the bench read three sub-second queries at 1.2-3.5 s that
+all re-measured clean on a quiet VM.
+
+This module imports nothing from the engine package: the touched
+queries come from the source text, and ``ab.py`` runs each arm's
+package in a child process of its own.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import os
-import shutil
+import re
 import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PY = sys.executable
+QUERIES_DIR = "quantum_rag_data_pipeline_spark/queries/"
+_HUNK = re.compile(r"^@@ -(\d+)(?:,(\d+))? \+(\d+)(?:,(\d+))? @@", re.M)
 
 
-def current_round(repo: str = REPO) -> int:
-    """Round number for versioned gate artifacts: the last PROGRESS.jsonl
-    heartbeat's round, or max committed CORRECTNESS_r*.json + 1 (the
-    driver writes those at round close) — whichever is LARGER. The max
-    matters early in a round: heartbeats lag the round boundary by up
-    to their ~15 min cadence, and a gate run in that window used to
-    version its snapshot into the PREVIOUS round's name, rotating a
-    committed clean-gate artifact aside (round-14). Reads ``repo``'s
-    own counters — a snapshot taken for a non-default repo must be
-    versioned by THAT repo's round, not the module-level one (round-13
-    advisor: the rotation test only passed because its tmp repo
-    happened to mirror the real repo's round number)."""
-    import glob
-    import re
-
-    candidates = [0]
-    try:
-        with open(os.path.join(repo, "PROGRESS.jsonl")) as f:
-            lines = [ln for ln in f if ln.strip()]
-        candidates.append(int(json.loads(lines[-1])["round"]))
-    except Exception:  # noqa: BLE001 — any fallback beats crashing the gate
-        pass
-    rounds = [int(m.group(1)) for p in
-              glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-              if (m := re.search(r"_r(\d+)\.json$", p))]
-    if rounds:
-        candidates.append(max(rounds) + 1)
-    return max(candidates)
-
-
-# Launch bars for --wait-healthy: the round-13 recipe (probe-gate the
-# bench on the two dimensions whose degradation produced every
-# violation set since r11), now a flag instead of a hand-rolled shell
-# loop. ~0.9x the ERA_REF healthy references — strict enough to dodge
-# the degraded windows, loose enough that a normal evening qualifies.
-LAUNCH_BARS = {"disk_wgbps": 0.35, "cpu_gflops_min": 18.0}
-
-
-def _era_probe_subprocess() -> dict:
-    """One era-probe reading in a subprocess (bench.py's probe imports
-    the full queries package and forks a 32-proc CPU probe — neither
-    belongs in the gate's own process)."""
-    code = ("import json, sys; sys.path.insert(0, {!r}); "
-            "from bench import era_probe; "
-            "print(json.dumps(era_probe()))".format(REPO))
-    r = subprocess.run([PY, "-c", code], capture_output=True, text=True,
-                       timeout=300, cwd=REPO)
-    for line in reversed(r.stdout.strip().splitlines()):
-        try:
-            return json.loads(line)
-        except json.JSONDecodeError:
+def query_spans(source: str) -> list[tuple[int, int, str]]:
+    """``(first, last, name)`` line spans of the ``@query("name", ...)``
+    functions in a module's source, decorators included."""
+    spans = []
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
-    return {}
+        for dec in node.decorator_list:
+            if (isinstance(dec, ast.Call) and getattr(dec.func, "id", "") == "query"
+                    and dec.args and isinstance(dec.args[0], ast.Constant)):
+                spans.append((node.decorator_list[0].lineno, node.end_lineno,
+                              dec.args[0].value))
+    return spans
 
 
-def probe_is_healthy(probe: dict) -> bool:
-    """All LAUNCH_BARS dims present and at-or-over their bar. A missing
-    dim fails closed — an unmeasurable era is not a healthy one."""
-    return all(isinstance(probe.get(d), (int, float)) and probe[d] >= bar
-               for d, bar in LAUNCH_BARS.items())
+def hunk_lines(diff: str) -> tuple[set[int], set[int]]:
+    """The lines a ``-U0`` diff of one file touches: the old side's
+    removed lines and the new side's added lines."""
+    old, new = set(), set()
+    for m in _HUNK.finditer(diff):
+        a, b, c, d = (int(x) if x is not None else 1 for x in m.groups())
+        old.update(range(a, a + b))
+        new.update(range(c, c + d))
+    return old, new
 
 
-def wait_healthy(max_minutes: float = 50, poll_s: float = 150,
-                 probe_fn=None, sleep_fn=time.sleep) -> bool:
-    """Block until TWO CONSECUTIVE era probes clear LAUNCH_BARS, or the
-    time budget runs out (returns False — the caller proceeds anyway: a
-    recorded degraded run beats no run, and the per-segment timeline
-    labels it). Two consecutive readings because one is not a window:
-    the r14 gate launched on a single 0.43 GB/s disk probe and the
-    bench's own pre-probe READ 0.063 SECONDS LATER — the documented
-    within-a-minute disk flip. Back-to-back probes are ~10 s apart, so
-    a pair bounds the flip risk the way a single reading cannot."""
-    probe_fn = probe_fn or _era_probe_subprocess
-    deadline = time.monotonic() + max_minutes * 60
-    streak = 0
-    while True:
-        probe = probe_fn()
-        ok = probe_is_healthy(probe)
-        streak = streak + 1 if ok else 0
-        shown = {d: probe.get(d) for d in LAUNCH_BARS}
-        print(f"wait-healthy: probe {shown} "
-              f"{'ok' if ok else 'below bars'} (streak {streak}/2)",
-              flush=True)
-        if streak >= 2:
-            return True
-        if time.monotonic() >= deadline:
-            print(f"wait-healthy: no healthy window within "
-                  f"{max_minutes:g} min — proceeding on a degraded era "
-                  f"(the run's segment timeline will label it)")
-            return False
-        if ok:
-            continue  # confirm immediately — the pair must be adjacent
-        sleep_fn(poll_s)
+def names_at(source: str, lines: set[int]) -> set[str]:
+    return {name for first, last, name in query_spans(source)
+            if any(first <= ln <= last for ln in lines)}
 
 
-def snapshot_gate_bench(min_mtime: float, repo: str = REPO) -> str | None:
-    """Versioned gate artifact (round-12 judge item 2): the driver's
-    post-round bench overwrites BENCH_FULL.json, so an in-round
-    clean-gate run used to survive only as prose in BASELINE.md —
-    unverifiable. Snapshot the gate's full per-query dump (timings +
-    era vector) to a round-stamped file; committing it makes any
-    "0 violations" claim re-checkable with `bench_compare
-    BENCH_GATE_r<N>.json`.
+def touched_queries(base: str, repo: str = REPO) -> set[str]:
+    """Registered names of the ``@query`` functions whose lines the
+    working tree adds, changes or deletes relative to ``base``: the new
+    side of each hunk is matched against the file as it is, the old side
+    against the file at ``base``."""
+    def git(*args):
+        return subprocess.run(["git", "-C", repo, *args], capture_output=True,
+                              text=True, check=True).stdout
 
-    A superseded same-round gate run is ROTATED to the next free
-    indexed name (``BENCH_GATE_r13.1.json``, ``.2`` ...), not
-    overwritten: its minima (and their era stamps) must keep feeding
-    the anchor ratchet — overwriting in place silently demoted
-    provenance to "source record no longer on disk" (seen on the
-    second r13 gate). The unsuffixed file remains "the LAST gate of
-    the round", the one its claims cite.
-
-    Returns the snapshot path, or None when BENCH_FULL.json is absent
-    or predates ``min_mtime`` (a skipped/failed bench must not
-    re-snapshot a stale run)."""
-    src = os.path.join(repo, "BENCH_FULL.json")
-    if not (os.path.exists(src) and os.path.getmtime(src) >= min_mtime):
-        return None
-    dst = os.path.join(repo, f"BENCH_GATE_r{current_round(repo):02d}.json")
-    if os.path.exists(dst):
-        i = 1
-        while os.path.exists(f"{dst[:-5]}.{i}.json"):
-            i += 1
-        os.replace(dst, f"{dst[:-5]}.{i}.json")
-    shutil.copyfile(src, dst)
-    return dst
+    names = set()
+    for path in git("diff", "--name-only", base, "--", QUERIES_DIR).split():
+        if not path.endswith(".py"):
+            continue
+        old, new = hunk_lines(git("diff", "-U0", base, "--", path))
+        full = os.path.join(repo, path)
+        if new and os.path.exists(full):
+            with open(full) as f:
+                names |= names_at(f.read(), new)
+        if old:
+            names |= names_at(git("show", f"{base}:{path}"), old)
+    return names
 
 
-def main() -> int:
-    gates: list[tuple[str, list[str]]] = [
-        # bench FIRST: the original order ran it after ~25 min of
-        # pytest+oracle saturation, and the load shadow put three
-        # sub-second queries at 1.2-3.5 s — raw-tier violations that all
-        # quiet-triaged to 0.3-1.3x (first round-10 full-gate run). The
-        # old docstring claimed order was immaterial because of the
-        # warm-retry pass; the retries run inside the same shadow, so it
-        # is not. Timing gates get the quiet VM; correctness gates don't
-        # care when they run.
+def judge(record: dict) -> list[str]:
+    """The failures in an ``ab.py`` record, one line each: a query whose
+    ``ab.verdict`` is "B slower", whose arms' result hashes differ, or
+    whose children reported an error. An empty list passes."""
+    failures = []
+    for name, q in record["queries"].items():
+        for e in q["errors"]:
+            failures.append(f"{name}: error {e}")
+        if q["verdict"] == "B slower":
+            failures.append(f"{name}: B slower (median {q['a_median']} -> "
+                            f"{q['b_median']} s, A won {q['a_wins']}/{q['pairs']})")
+        if q.get("hash_match") is False:
+            failures.append(f"{name}: result hashes differ")
+    return failures
+
+
+def ab_gate(base: str, extra: list[str]) -> int:
+    names = sorted(touched_queries(base) | set(extra))
+    print(f"ab: base {base}, queries {names or 'none'}")
+    if not names:
+        return 0
+    p = subprocess.run([PY, "tools/ab.py", base, ".", *names], cwd=REPO,
+                       capture_output=True, text=True)
+    try:
+        record = json.loads(p.stdout.strip().splitlines()[-1])
+    except (IndexError, ValueError):
+        print((p.stdout + "\n" + p.stderr).strip()[-2000:])
+        return p.returncode or 1
+    for name, q in record["queries"].items():
+        print(f"ab: {name}: {q['verdict']} (medians {q.get('a_median')} -> "
+              f"{q.get('b_median')} s, B won {q.get('b_wins')}/{q.get('pairs')})")
+    failures = judge(record)
+    for line in failures:
+        print(f"ab: FAIL {line}")
+    return 1 if failures else 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = list(sys.argv[1:] if argv is None else argv)
+    base = None
+    if "--base" in args:
+        i = args.index("--base")
+        if i + 1 >= len(args):
+            print("round_gate: --base needs a git ref")
+            return 2
+        base = args[i + 1]
+        del args[i:i + 2]
+    gates: list[tuple[str, list[str] | None]] = [
         ("bench", [PY, "bench.py"]),
-        ("compare", [PY, "tools/bench_compare.py"]),
+        ("ab", None),  # ab_gate
         ("pytest", [PY, "-m", "pytest", "tests/", "-q"]),
         ("oracle", [PY, "tools/oracle_check.py", "/root/testdata/sf0.01"]),
         ("ledger", [PY, "tools/verify_ledger.py", "--check"]),
@@ -185,79 +159,56 @@ def main() -> int:
         ("replication", [PY, "tools/replication_coverage.py"]),
     ]
     names = {n for n, _ in gates}
-    skip = set()
-    args = list(sys.argv[1:])
-    if "--wait-healthy" in args:
-        args.remove("--wait-healthy")
-        wait_healthy()
+    skip, queries = set(), []
     for a in args:
-        if not a.startswith("--skip-"):
+        if a.startswith("--skip-"):
+            g = a.removeprefix("--skip-")
+            if g not in names:  # a typo must not silently run a 10-min gate
+                print(f"round_gate: unknown gate {g!r} (gates: {sorted(names)})")
+                return 2
+            skip.add(g)
+        elif a.startswith("-"):
             print(f"round_gate: unknown argument {a!r}")
             return 2
-        g = a.removeprefix("--skip-")
-        if g not in names:  # a typo must not silently run a 10-min gate
-            print(f"round_gate: unknown gate {g!r} (gates: {sorted(names)})")
+        else:
+            queries.append(a)
+    if "ab" not in skip:
+        if base is None:
+            print("round_gate: the ab gate needs --base REF (the round's base commit)")
             return 2
-        skip.add(g)
-    if "bench" in skip and "compare" not in skip:
-        # compare reads BENCH_FULL.json; without a fresh bench it would
-        # certify (or fail) the PREVIOUS round's run as if it were this
-        # code's — skip it too rather than judge stale timings.
-        print("round_gate: --skip-bench implies skipping compare "
-              "(it would judge a stale BENCH_FULL.json)")
-        skip.add("compare")
+        if subprocess.run(["git", "-C", REPO, "rev-parse", "--verify", "--quiet",
+                           f"{base}^{{commit}}"], stdout=subprocess.DEVNULL).returncode:
+            print(f"round_gate: {base!r} is not a commit")
+            return 2
+        if not os.environ.get("SPARK_GRAFT_SF_DIR"):
+            print("round_gate: the ab gate needs SPARK_GRAFT_SF_DIR")
+            return 2
 
-    results: dict[str, tuple[int, float, str]] = {}
+    results: dict[str, int] = {}
     for name, cmd in gates:
         if name in skip:
-            results[name] = (-1, 0.0, "SKIPPED by flag")
             print(f"[skipped ] {name}")
             continue
         t0 = time.perf_counter()
-        wall0 = time.time()  # epoch stamp for the mtime freshness check
-        p = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
-        dt = time.perf_counter() - t0
-        tail = (p.stdout.strip().splitlines() or [""])[-1][:160]
-        results[name] = (p.returncode, dt, tail)
-        status = "ok" if p.returncode == 0 else f"FAIL rc={p.returncode}"
-        print(f"[{status:8s}] {name:12s} {dt:7.1f}s  {tail}", flush=True)
-        if p.returncode != 0:
+        if cmd is None:
+            rc, tail, detail = ab_gate(base, queries), "", []
+        else:
+            p = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
+            rc = p.returncode
+            tail = (p.stdout.strip().splitlines() or [""])[-1][:160]
             # last 15 lines of whichever stream has the failure detail
             detail = (p.stdout + "\n" + p.stderr).strip().splitlines()[-15:]
+        results[name] = rc
+        status = "ok" if rc == 0 else f"FAIL rc={rc}"
+        print(f"[{status:8s}] {name:12s} {time.perf_counter() - t0:7.1f}s  {tail}",
+              flush=True)
+        if rc != 0:
             for line in detail:
                 print(f"    | {line}")
-        if name == "bench":
-            # Only a CLEAN bench run becomes a versioned, ratchet-feeding
-            # snapshot (round-13 advisor): a failing bench's dump carries
-            # partial/aborted timings whose minima would still feed the
-            # anchor ratchet and whose "gate artifact" status would read
-            # as a clean-run citation. The uncommitted BENCH_FULL.json
-            # remains on disk for triage either way.
-            if p.returncode != 0:
-                print("           bench FAILED — gate snapshot skipped "
-                      "(BENCH_FULL.json left for triage, not versioned)")
-            else:
-                dst = snapshot_gate_bench(wall0)
-                if dst:
-                    print(f"           bench snapshot -> "
-                          f"{os.path.basename(dst)}"
-                          f" (commit it; bench_compare re-checks it)")
-    # Keep BASELINE.md's auto-generated "Current state" header in sync
-    # with the code it mirrors (round-13 judge item 8) — refresh is
-    # idempotent and never fails the gate.
-    try:
-        sys.path.insert(0, os.path.join(REPO, "tools"))
-        import baseline_header
 
-        baseline_header.refresh()
-    except Exception as exc:  # noqa: BLE001 — doc refresh must not gate
-        print(f"round_gate: baseline_header refresh failed: {exc}")
-
-    failed = [n for n, (rc, _, _) in results.items() if rc > 0]
-    skipped = sorted(n for n, (rc, _, _) in results.items() if rc == -1)
-    green = len(gates) - len(failed) - len(skipped)
-    print(f"round_gate: {green}/{len(gates)} gates green"
-          + (f"; SKIPPED: {skipped}" if skipped else "")
+    failed = [n for n, rc in results.items() if rc != 0]
+    print(f"round_gate: {len(results) - len(failed)}/{len(gates)} gates green"
+          + (f"; SKIPPED: {sorted(skip)}" if skip else "")
           + (f"; FAILED: {failed}" if failed else ""))
     return 1 if failed else 0
 
