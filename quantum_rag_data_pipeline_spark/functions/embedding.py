@@ -63,11 +63,9 @@ def make_embed_udf(encoder: Encoder | None = None, dim: int = DEFAULT_DIM):
     return embed
 
 
-def scrubbed_for_embedding(col: Column, fix_newlines: bool = False) -> Column:
+def scrubbed_for_embedding(col: Column) -> Column:
     """The reference scrubs the two-character literal ``\\n`` (NOT real
-    newlines) before embedding (embedding_service.py:67,107 — P15 quirk).
-    Preserved for parity; flag switches to scrubbing real newlines."""
-    out = F.regexp_replace(col, r"\\n", " ")
-    if fix_newlines:
-        out = F.regexp_replace(out, "\n", " ")
-    return out
+    newlines) before embedding (embedding_service.py:67,107 — P15 quirk),
+    so the 11-line sentence reaches the encoder with its real newlines.
+    Preserved for parity."""
+    return F.regexp_replace(col, r"\\n", " ")

@@ -15,12 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: aggregation methods supported by the reference's configurable
-#: per-column aggregate (reference ``src/main.py:69-93``); unknown
-#: methods default to "sum" (``:86-89``).
-_METHODS = ("average", "max", "sum")
-
-
 def _exact(col: str, scale: int = 2) -> Column:
     # money/metric doubles in the testdata carry <=2 decimal digits;
     # DECIMAL(30,scale) holds any sum at TB-scale row counts.
@@ -57,22 +51,6 @@ def metric_agg(col: str, method: str, alias: str | None = None) -> Column:
     else:  # sum, and the reference's default-for-unknown-method behavior
         expr = exact_sum_double(col).alias(alias)
     return expr
-
-
-def metric_catalog(df: DataFrame, catalog: list[tuple[str, str]], group_by: list[str] | None = None) -> DataFrame:
-    """A1/A2: apply a (field, method) catalog in ONE aggregate pass —
-    the reference loops per field; Spark fuses all of them into a single
-    hash aggregate so the fact table is scanned once."""
-    aggs = [metric_agg(c, m) for c, m in catalog]
-    if group_by:
-        return df.groupBy(*group_by).agg(*aggs)
-    out = df.agg(*aggs)
-    # empty-relation global agg: reference yields 0.0, SQL yields NULL
-    zeroed = [
-        F.coalesce(F.col(a), F.lit(0.0)).alias(a) if m in ("average", "sum") else F.col(a)
-        for (c, m), a in zip(catalog, [f"{m}_{c}" for c, m in catalog])
-    ]
-    return out.select(*zeroed)
 
 
 def horizontal_skipna_mean(cols: list[str], alias: str = "row_mean") -> Column:

@@ -26,11 +26,6 @@ from pyspark.sql import functions as F
 from quantum_rag_data_pipeline_spark.operators.text import fingerprint, tokens
 
 
-def normalized_text(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: keep the lowest-id doc per normalized-text fingerprint.
 

@@ -1,4 +1,4 @@
-"""Joins and pivots (SURVEY.md §2.4, J1–J2).
+"""Joins (SURVEY.md §2.4, J1–J2).
 
 Scale policy, applied at every call site in this package:
 - bounded-cardinality dimensions (region, nation, city lookup) → explicit
@@ -7,20 +7,13 @@ Scale policy, applied at every call site in this package:
   handled by AQE (``spark.sql.adaptive.skewJoin.enabled``);
 - the reference's N-way full-outer pandas merge (``weather.py:94-97``) is
   re-expressed as groupBy().pivot() over the LONG format — one shuffle
-  total instead of N-1 joins.
+  total instead of N-1 joins (``sources/weather.py:hourly_wide_table``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_enrich(
-    fact: DataFrame, dim: DataFrame, on: str | list[str] | Column, how: str = "inner"
-) -> DataFrame:
-    """J2-style enrich join with an explicitly broadcast dimension."""
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def asof_join(
@@ -65,46 +58,4 @@ def asof_join(
     out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
     return merged.filter(F.col("_is_left") == 1).select(
         *out_cols, *[F.col(f"{c}{suffix}") for c in payload_cols]
-    )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    lower,
-    upper,
-    how: str = "inner",
-) -> DataFrame:
-    """Interval join: right rows with ``left.ts + lower <= right.ts <
-    left.ts + upper`` on the same key. Equi-join on the key carries the
-    shuffle; the range predicate evaluates post-match — at 100 TB add
-    coarse time-bucket keys to both sides to bound the per-key fan-out."""
-    lts, rts = F.col(f"_l.{left_ts}"), F.col(f"_r.{right_ts}")
-    cond = (F.col(f"_l.{key}") == F.col(f"_r.{key}")) & (rts >= lts + lower) & (rts < lts + upper)
-    return left.alias("_l").join(right.alias("_r"), cond, how)
-
-
-def pivot_wide(
-    df: DataFrame,
-    key_col: str,
-    pivot_col: str,
-    value_col: str,
-    pivot_values: list[str],
-    agg: str = "first",
-) -> DataFrame:
-    """J1: long → wide pivot.
-
-    Passing explicit ``pivot_values`` matters at scale: without them Spark
-    runs an extra distinct() job over the full table just to discover the
-    column set. One shuffle on ``key_col``; pivot columns are built
-    map-side as a pivot-aggregate.
-    """
-    agg_fn = {"first": F.first, "avg": F.avg, "sum": F.sum, "max": F.max, "min": F.min}[agg]
-    return (
-        df.groupBy(key_col)
-        .pivot(pivot_col, pivot_values)
-        .agg(agg_fn(F.col(value_col)))
     )

@@ -13,10 +13,11 @@ The pattern that matters at 100 TB:
   content-hash bucket before heavy decode so stragglers (few huge files
   per partition) even out.
 
-The container has no image/audio libraries, so REAL decoding is stubbed:
-``decode_real_image`` raises NotImplementedError (clearly marked), and
+No image/audio codec is a dependency, so there is no REAL decoding:
 the deterministic fake format below exercises the full Spark-side
-plumbing — schema, batching, UDF signatures — with real bytes.
+plumbing — schema, batching, UDF signatures — with real bytes. A
+deployment with PIL/opencv on its executors decodes inside the same
+``mapInPandas`` stages.
 
 Fake format (deterministic, derived from the documents table):
   magic   4 bytes  b"IMG1" | b"AUD1" | b"VID1"
@@ -121,7 +122,7 @@ def extract_features(media: DataFrame) -> DataFrame:
 def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
     """'Resize' stage: images larger than max_side get a rewritten header
     and proportionally truncated payload (the deterministic stand-in for
-    a real PIL resize — see decode_real_image for the real-codec stub)."""
+    a real PIL resize)."""
 
     def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -159,14 +160,3 @@ def sample_frames(media: DataFrame, every_k: int = 8, frame_bytes: int = 64) -> 
             yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
 
     return media.mapInPandas(sf, FRAME_SCHEMA)
-
-
-def decode_real_image(payload: bytes):  # pragma: no cover - stub by design
-    """REAL image decoding — STUB. The runtime has no PIL/opencv; a
-    deployment installs one on executors and fills this in. Everything
-    around it (schema, batching, partitioning) is exercised by the fake
-    format above."""
-    raise NotImplementedError(
-        "real image decoding requires PIL/opencv on executors; "
-        "use the deterministic fake format for plumbing tests"
-    )

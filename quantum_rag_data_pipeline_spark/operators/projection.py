@@ -1,4 +1,5 @@
-"""Projection / filter / scalar transforms (SURVEY.md §2.2, P1–P15).
+"""Scalar transforms (SURVEY.md §2.2: P2, P5, P6, P12–P14). The other
+P rows live where the pipeline applies them (COVERAGE.md §2.2).
 
 All pure column expressions — they stay inside whole-stage codegen and
 cost nothing extra at 100 TB. No Python UDFs here.
@@ -10,27 +11,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def project_by_name(df: DataFrame, fields: list[str]) -> DataFrame:
-    """P1 + P3: select the requested columns, silently skipping ones the
-    source doesn't carry (reference resolves names at runtime and omits
-    missing fields, ``src/main.py:66,70``)."""
-    present = [f for f in fields if f in df.columns]
-    return df.select(*[F.col(f) for f in present])
-
-
 def permissive_double(col: Column | str) -> Column:
     """P2: permissive numeric cast — unparseable cells become NULL instead
     of raising (reference drops bad cells per ``src/main.py:74-79``).
     ``try_cast`` keeps the expression JVM-side and pushdown-friendly."""
     c = F.col(col) if isinstance(col, str) else col
     return c.try_cast("double")
-
-
-def drop_null_or_nan(df: DataFrame, col: str) -> DataFrame:
-    """P4: NaN/None guard (reference ``sentence_builder.py:59-63``;
-    NaN self-compare at ``meteostat_weather.py:48``)."""
-    c = F.col(col)
-    return df.filter(c.isNotNull() & ~F.isnan(c))
 
 
 def celsius_to_fahrenheit(col: Column | str) -> Column:
@@ -43,40 +29,6 @@ def round_fixed(col: Column | str, precision: int = 2) -> Column:
     """P6: fixed-point rounding (reference ``meteostat_weather.py:58``)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c, precision)
-
-
-def format_metric(col: Column | str, unit: str = "MW", precision: int = 0) -> Column:
-    """P7: number → display string, None → 'N/A'
-    (reference ``sentence_builder.py:32-38``).
-
-    Python's ``:.0f`` rounds half-to-even while Java's ``%.0f`` rounds
-    HALF_UP, so we pre-round with ``bround`` (half-even) and then format —
-    this reproduces the reference's golden output byte-for-byte.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    formatted = F.format_string(f"%.{precision}f {unit}", F.bround(c, precision))
-    # format_string does not null-propagate; test explicitly
-    return F.when(c.isNotNull(), formatted).otherwise(F.lit("N/A"))
-
-
-def scrub_literal_backslash_n(col: Column | str, fix_newlines: bool = False) -> Column:
-    """P15: the reference scrubs the two-char literal ``\\n`` — not real
-    newlines — before embedding (``embedding_service.py:67,107``). Preserved
-    behind a flag; ``fix_newlines=True`` scrubs real newlines too."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.regexp_replace(c, r"\\n", " ")
-    if fix_newlines:
-        out = F.regexp_replace(out, "\n", " ")
-    return out
-
-
-def flatten_struct_paths(df: DataFrame, paths: dict[str, str]) -> DataFrame:
-    """P11: nested-field flattening — ``{"seller_username": "seller.username",
-    "shipping_cost": "shippingOptions[0].shippingCost.value"}`` →
-    flat columns; missing/NULL nested values propagate as NULL for free
-    (reference ``dynamodb.py:100-137,230-242``)."""
-    cols = [F.expr(src).alias(dst) for dst, src in paths.items()]
-    return df.select(*cols)
 
 
 def with_raw_json(df: DataFrame, col_name: str = "raw_json") -> DataFrame:

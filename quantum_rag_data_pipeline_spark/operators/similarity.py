@@ -47,17 +47,17 @@ _DOT_CACHE_CTX: list = [None]  # active SparkContext the cache was built under
 # control (200k dim-64 vectors; BASELINE.md round 11): hint-on and
 # hint-off produce row-identical outputs and the
 # co-partitioned shuffle join is already at par or faster (dbscan
-# 48.6 s shuffle vs 44-88 s broadcast; semdedup 9.5 vs 10.7), so the
-# hint buys nothing at 200k while its memory risk only grows with n.
+# 48.6 s shuffle vs 44-88 s broadcast), so the hint buys nothing at
+# 200k while its memory risk only grows with n.
 # 100k keeps the hint where it measurably helps (20k-vector sf1 runs,
 # round 10) and hands everything larger to the shuffle join (AQE may
 # still legitimately broadcast a side it MEASURES as small).
 # Overridable via SPARK_GRAFT_BCAST_MAX_ROWS so scale runs can force
 # and time either shape at any corpus size: below the gate, `tools/ab.py
-# . .+SPARK_GRAFT_BCAST_MAX_ROWS=0 dbscan_core_border_noise
-# semdedup_prune` times hint-on against hint-off, result hashes standing
-# in for the row-identity compare; at the 200k control arm A must lift
-# the gate (`.+SPARK_GRAFT_BCAST_MAX_ROWS=1099511627776`).
+# . .+SPARK_GRAFT_BCAST_MAX_ROWS=0 dbscan_core_border_noise` times
+# hint-on against hint-off, result hashes standing in for the
+# row-identity compare; at the 200k control arm A must lift the gate
+# (`.+SPARK_GRAFT_BCAST_MAX_ROWS=1099511627776`).
 BROADCAST_MAX_ROWS = 100_000
 
 
@@ -496,8 +496,10 @@ def _score_blocks(
                           "cos_sim": pd.Series(dtype="float64")})
 
     def unpack(side: pd.DataFrame):
+        # only the first ``dim`` components: the prefilter must see what
+        # ``_seq_cos`` scores, or it drops pairs the exact score keeps
         ids = side["_id"].to_numpy(dtype=np.int64)
-        V = np.stack(side["_vec"].to_numpy()).astype(np.float64)
+        V = np.stack(side["_vec"].to_numpy()).astype(np.float64)[:, :dim]
         return ids, V, V / np.linalg.norm(V, axis=1, keepdims=True)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1149,106 +1151,56 @@ def semdedup_prune(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_vectors: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup = cluster the
     embedding space, then prune near-duplicates WITHIN each cluster —
     the pairwise O(n²) is bounded to the largest cluster instead of the
     corpus, which is what makes cosine dedup feasible at 100 TB (k
-    clusters of n/k rows → n²/k pair work, and each cluster's join is
-    an independent shuffle-partition-local task).
+    clusters of n/k rows → n²/k pair work, and each cluster is an
+    independent grouped-map task).
 
-    E-step reuses ``assign_to_centroids`` (broadcast centroids, one
-    shuffle carrying (id, cluster) only); the intra-cluster pair scan
-    reuses ``embedding_near_dup_pairs(block_col='centroid_id')``. A row
-    is REMOVED when a lower-id member of the same cluster sits within
-    ``threshold`` cosine — keep-lowest-id is SemDeDup's deterministic
-    representative rule.
+    E-step reuses ``assign_to_centroids`` (broadcast centroids, no
+    shuffle of the vectors); the intra-cluster pair scan is ONE
+    ``_score_blocks`` pass in threshold mode with one group per
+    cluster. A row is REMOVED when a lower-id member of the same cluster
+    sits within ``threshold`` cosine — keep-lowest-id is SemDeDup's
+    deterministic representative rule.
 
     Returns (id, centroid_id, removed) — the per-document verdict frame
     a curation pipeline anti-joins against the corpus.
 
     Family conventions (shared with embedding_near_dup_pairs_fast): the
-    BLAS prefilter requires integral ``id_col`` values (materialized as
-    int64 in the per-cluster batch) and scores the first ``dim``
-    components only — vectors are sliced to ``[:dim]`` so the prefilter
-    matches the dim-bounded exact rescore."""
+    kernel requires integral ``id_col`` values (int64 in the group
+    batch) and scores the first ``dim`` components only, in its prefilter
+    and its exact ``_seq_cos`` score alike, so verdicts equal the
+    row-wise ``embedding_near_dup_pairs(block_col="centroid_id", dim=dim)``
+    over the same assignment. Centroid ids must lie in [0, 2**31): each
+    cluster's group id encodes it as a diagonal block of a 2**31-block
+    self grid, and an id outside that range fails the query."""
     # two consumers (the members join and the final verdict join) would
-    # re-run the whole E-step — two broadcast builds + the scored
-    # cross-join — per invocation; cache() materializes the (id, cluster)
-    # table once. It is the artifact a production SemDeDup run persists
-    # anyway (n rows x 16 bytes — the smallest frame in the pipeline).
-    # Same CacheManager lifetime caveat as ngram_jaccard_pairs.
-    import numpy as np
-
+    # re-run the whole E-step per invocation; cache() materializes the
+    # (id, cluster) table once. It is the artifact a production SemDeDup
+    # run persists anyway (n rows x 16 bytes — the smallest frame in the
+    # pipeline). Same CacheManager lifetime caveat as ngram_jaccard_pairs.
     assigned = assign_to_centroids(
         vectors, centroids, dim, id_col=id_col, vec_col=vec_col
     ).select(id_col, "centroid_id").cache()
-    members = assigned.join(vectors.select(id_col, vec_col), id_col)
-    # Intra-cluster scan as ONE BLAS call per cluster (round 10): the
-    # clusters are natural applyInPandas groups, so the row-wise blocked
-    # self-join (vectors riding the exchange, one unrolled dot per pair)
-    # becomes a normalized gram matrix per group — the same prefilter +
-    # exact-rescore shape as embedding_near_dup_pairs_fast, with the
-    # diagonal-only case because pairs never cross clusters. The rescore
-    # recomputes candidates with the sequential unrolled dot at the TRUE
-    # threshold, so verdicts are bit-identical to the row-wise operator
-    # (the 1e-6 margin absorbs matmul reordering error). Cluster size is
-    # bounded by construction — SemDeDup scales k with n precisely so
-    # groups stay matmul-sized; a pathologically skewed cluster is the
-    # caller's k choice, not a shuffle artifact.
-    thr = threshold - 1e-6
-
-    def _cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()  # varied-size per-cluster grams re-fault
-        empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                              "id_b": pd.Series(dtype="int64")})
-        if len(pdf) < 2:
-            return empty
-        ids = pdf["_id"].to_numpy(dtype=np.int64)
-        # truncate at dim like the exact rescore below — a vector longer
-        # than dim must not be prefiltered on components the dim-bounded
-        # rescore (and the row-wise path) never sees.
-        V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)[:, :dim]
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        ii, jj = np.nonzero(np.triu(Vn @ Vn.T >= thr, k=1))
-        if len(ii) == 0:
-            return empty
-        la, lb = ids[ii], ids[jj]
-        return pd.DataFrame({"id_a": np.minimum(la, lb),
-                             "id_b": np.maximum(la, lb)})
-
-    cand = (
-        members.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-                       "centroid_id")
-        .groupBy("centroid_id")
-        .applyInPandas(_cluster_pairs, "id_a long, id_b long")
+    # pid = c·(B+1) gives pid // B == pid % B == c: the kernel reads
+    # every cluster as a diagonal group (its block against itself, each
+    # unordered pair once) with no cluster-specific branch.
+    B = 2 ** 31
+    cid = F.col("centroid_id")
+    members = assigned.join(vectors.select(id_col, vec_col), id_col).select(
+        F.lit(0).alias("_seg"),
+        F.when((cid >= 0) & (cid < B), cid * (B + 1)).otherwise(
+            F.raise_error(F.lit("semdedup_prune: centroid_id outside [0, 2**31)"))
+        ).alias("pid"),
+        F.lit("a").alias("_side"),
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
     )
-    vecs = vectors.select(F.col(id_col), F.col(vec_col),
-                          norm(F.col(vec_col), dim).alias("_n"))
-    # rescore-join strategy is SIZE-ADAPTIVE (round-11 judge item 2):
-    # the candidate side is a Python-stage frame with no stats, so the
-    # planner would sort-merge both joins; hinting the vector side is
-    # the fast shape ONLY while the full table is broadcastable. Gated
-    # on the caller's counted rows — above the bound it stays an
-    # unhinted co-partitioned id join (same values either way).
-    rescored = (
-        cand.join(adaptive_broadcast(
-            vecs.select(F.col(id_col).alias("id_a"),
-                        F.col(vec_col).alias("vec_a"),
-                        F.col("_n").alias("n_a")), n_vectors), "id_a")
-        .join(adaptive_broadcast(
-            vecs.select(F.col(id_col).alias("id_b"),
-                        F.col(vec_col).alias("vec_b"),
-                        F.col("_n").alias("n_b")), n_vectors), "id_b")
-        .filter(
-            dot(F.col("vec_a"), F.col("vec_b"), dim)
-            / (F.col("n_a") * F.col("n_b")) >= threshold
-        )
-    )
-    removed = rescored.select(F.col("id_b").alias(id_col)).distinct().withColumn(
+    pairs = _score_blocks(members, {0: (B, False)}, dim,
+                          threshold=threshold, margin=1e-6)
+    removed = pairs.select(F.col("dst").alias(id_col)).distinct().withColumn(
         "_rm", F.lit(True)
     )
     return assigned.join(removed, id_col, "left").select(

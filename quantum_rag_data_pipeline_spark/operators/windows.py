@@ -35,18 +35,6 @@ def sliding_window_agg(
     )
 
 
-def day_sequence(df_or_spark, start: str, stop: str) -> DataFrame:
-    """F3: generate one row per day in [start, stop] —
-    ``sequence()+explode`` replaces the reference's python while-loop
-    (``src/main.py:289-303``)."""
-    spark = df_or_spark if not isinstance(df_or_spark, DataFrame) else df_or_spark.sparkSession
-    return spark.range(1).select(
-        F.explode(
-            F.sequence(F.to_date(F.lit(start)), F.to_date(F.lit(stop)))
-        ).alias("day")
-    )
-
-
 def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     """Global top-k: ``orderBy(...).limit(k)`` compiles to TakeOrderedAndProject —
     each partition keeps a k-row heap, only k rows per partition reach the

@@ -20,10 +20,7 @@ The aggregates and the sentence are Spark SQL strings, which the JVM
 parses one per call: the 2-day plan builds in ~210 py4j round trips,
 where the same expressions built Column by Column took 3.5k-4.9k. The
 plan has one ERCOT leaf whatever the window length, and its row
-count rides the upsert as an ``Observation`` (no second pass). At scale
-the fetch can move executor-side: ``sources.ercot_datasource`` decodes
-through the same ``envelope_rows`` into the same long-form cells, one
-endpoint per read.
+count rides the upsert as an ``Observation`` (no second pass).
 """
 
 from __future__ import annotations

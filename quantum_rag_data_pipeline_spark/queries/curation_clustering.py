@@ -2166,18 +2166,16 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-task pair work, roughly constant; the oracle derives the same
     # k from the same COUNT(*). At the driver's gate scales (n<=2000)
     # k stays 8, so verified outputs are unchanged. n is counted ONCE
-    # driver-side (a parquet-footer count job) — it drives k AND the
-    # size-adaptive rescore-join strategy inside the operator, and a
-    # literal k prunes the centroid filter at plan time instead of
-    # riding a crossJoin(broadcast(agg)) through every row.
+    # driver-side (a parquet-footer count job), and a literal k prunes
+    # the centroid filter at plan time instead of riding a
+    # crossJoin(broadcast(agg)) through every row.
     n = e.count()
     k = max(8, n // 250)
     cents = (
         e.filter(F.col("vec_id") < F.lit(k))
         .select(F.col("vec_id").alias("centroid_id"), "embedding")
     )
-    verdicts = sim_ops.semdedup_prune(e, cents, dim=64, threshold=0.4,
-                                      n_vectors=n)
+    verdicts = sim_ops.semdedup_prune(e, cents, dim=64, threshold=0.4)
     return verdicts.groupBy("centroid_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
         F.sum(F.col("removed").cast("int")).cast("bigint").alias("n_removed"),

@@ -14,8 +14,7 @@ Spark-first re-expression:
   ``(field, value)`` per cell with ALL values as strings to be
   permissively cast downstream (P2). ``plans.daily_summary`` collects
   every (endpoint, day) envelope into ONE Arrow literal relation of these
-  cells, and the executor-side DataSource (``ercot_datasource``) decodes
-  through the same function;
+  cells;
 - query parameters (date range, settlementPoint, hourEnding, service
   type) are **pushdown by construction**: they are sent to the source,
   never filtered post-hoc (reference ``queries.py:66-74,241-253,282-286``).

@@ -29,13 +29,6 @@ TABLES = (
     "embeddings",
 )
 
-# Tables small enough to broadcast at ANY scale factor (bounded cardinality
-# in TPC-H terms: region=5, nation=25; documents/embeddings are corpus-sized
-# in the testdata but would NOT be broadcast in production — see operators
-# that join them for per-case decisions).
-ALWAYS_BROADCAST = ("region", "nation")
-
-
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -120,9 +113,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
     return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view so ``spark.sql`` works directly."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,5 +1,5 @@
 """Watermarked stream-stream joins — the streaming twin of the batch
-range join (operators/joins.py:range_join).
+range join (the ``range_join_clicks_before_purchase`` query).
 
 A click "attributed" to a later purchase within a bounded interval is,
 in batch, a range join; in streaming it is Spark's canonical

@@ -1,40 +1,7 @@
-"""Spark-4 surface tests: custom Python DataSource + applyInPandasWithState."""
+"""Spark-4 streaming surface tests: stateful dedup, stream-stream joins,
+watermarked dedup and transformWithStateInPandas."""
 
 import os
-
-from pyspark.sql import functions as F
-
-
-def test_ercot_envelope_datasource(spark):
-    from quantum_rag_data_pipeline_spark.sources.ercot_datasource import register
-
-    register(spark)
-    df = (
-        spark.read.format("ercot_envelope")
-        .option("endpoint", "np3-910-er/2d_agg_gen_summary")
-        .option("date_from", "2025-05-01")
-        .option("date_to", "2025-05-04")
-        .load()
-    )
-    # 3 day-windows → 3 input partitions, executor-side fetch
-    assert df.rdd.getNumPartitions() == 3
-    days = {r["date_from"] for r in df.select("date_from").distinct().collect()}
-    assert days == {"2025-05-01", "2025-05-02", "2025-05-03"}
-    # long form feeds the same permissive-cast aggregation as the driver path
-    agg = (
-        df.filter(F.col("field") == "sumBasePointWGR")
-        .select(F.col("value").try_cast("double").alias("v"), "date_from")
-        .groupBy("date_from")
-        .agg(F.sum("v").alias("wind_sum"))
-    )
-    rows = agg.collect()
-    assert len(rows) == 3 and all(r["wind_sum"] > 0 for r in rows)
-    # deterministic across reads
-    again = spark.read.format("ercot_envelope") \
-        .option("endpoint", "np3-910-er/2d_agg_gen_summary") \
-        .option("date_from", "2025-05-01").option("date_to", "2025-05-04").load()
-    key = lambda t: (t[0], t[1], t[2] if t[2] is not None else "")
-    assert sorted(map(tuple, df.collect()), key=key) == sorted(map(tuple, again.collect()), key=key)
 
 
 def test_streaming_dedup_by_key(spark, tmp_path):
@@ -169,43 +136,3 @@ def test_transform_with_state_totals(spark, tmp_path):
     got = {r.user_id: (r.n_events, r.value_cents)
            for r in drain_available_now(out, "tws_test", output_mode="append").collect()}
     assert got == {1: (2, 375), 2: (1, 10)}
-
-
-def test_python_streaming_datasource_emits_exact_deterministic_feed(spark, tmp_path):
-    """The Spark 4 simpleStreamReader tier: the finite tick feed drains
-    exactly n_batches x 16 deterministic rows, and a re-read produces
-    the identical multiset (offset replay == exactly-once)."""
-    from quantum_rag_data_pipeline_spark.sources import ercot_datasource
-
-    ercot_datasource.register(spark)
-
-    def drain(name: str):
-        df = spark.readStream.format("ercot_ticks").option("n_batches", "3").load()
-        q = (
-            df.writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", str(tmp_path / name))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        import time
-
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table(name).count() >= 48:
-                break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-        return spark.table(name).collect()
-
-    rows = drain("tick_drain_a")
-    assert len(rows) == 48
-    # deterministic content: recompute the Knuth-hash feed locally
-    expected = set()
-    for b in range(3):
-        for i in range(16):
-            mw = float(((b * 16 + i) * 2654435761 % 4294967296) % 100000) / 100.0
-            expected.add((f"2024-01-0{b + 1}T00:{i:02d}:00", "HB_HUBAVG", mw))
-    assert {(r.sced_ts, r.settlement_point, r.mw) for r in rows} == expected
-    rows2 = drain("tick_drain_b")
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))

@@ -126,6 +126,20 @@ def test_missing_weather_gives_na(spark, golden_queries):
     assert "Avg system load: 51405 MW" in sentence
 
 
+def test_nan_weather_gives_na(spark, golden_queries):
+    """P4 (sentence_builder.py:59-63): a NaN temperature renders as N/A,
+    like a missing one; the sentence's ``nanvl`` is the only guard."""
+    weather = spark.createDataFrame(
+        [("2025-05-08", float("nan"))], "date string, avg_temp_c double"
+    ).select(F.to_date("date").alias("date"), "avg_temp_c")
+    df = build_daily_summaries(
+        spark, golden_queries, weather, "2025-05-08", "2025-05-09", embed_dim=8
+    )
+    sentence = df.collect()[0]["semantic_sentence"]
+    assert sentence.endswith("Avg Texas temp: N/A")
+    assert sentence.replace("Avg Texas temp: N/A", "Avg Texas temp: 21.9 °C") == GOLDEN
+
+
 def test_pipeline_upsert_idempotent(spark, golden_queries, tmp_path):
     sink = str(tmp_path / "embeddings_sink")
     n1 = run_daily_summary_pipeline(

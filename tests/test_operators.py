@@ -64,13 +64,11 @@ def test_a1_empty_values_yield_zero(spark):
 def test_p15_literal_backslash_n_scrub(spark):
     """P15 quirk (embedding_service.py:67): scrubs the two-char literal
     \\n, leaves real newlines."""
+    from quantum_rag_data_pipeline_spark.functions.embedding import scrubbed_for_embedding
+
     df = spark.createDataFrame([(r"a\nb" + "\nc",)], "t string")
-    out = df.select(proj_ops.scrub_literal_backslash_n("t").alias("s")).collect()[0]["s"]
+    out = df.select(scrubbed_for_embedding(F.col("t")).alias("s")).collect()[0]["s"]
     assert out == "a b\nc"
-    fixed = df.select(
-        proj_ops.scrub_literal_backslash_n("t", fix_newlines=True).alias("s")
-    ).collect()[0]["s"]
-    assert fixed == "a b c"
 
 
 def test_a3_horizontal_skipna_mean(spark):
@@ -629,35 +627,97 @@ def test_knn_graph_exact_with_forced_empty_blocks(spark, monkeypatch):
             assert inc == batch, f"B={B} {name}: {sorted(inc ^ batch)[:6]}"
 
 
-def test_block_pair_operators_run_one_python_stage(spark):
+def test_block_pair_operators_run_one_python_stage(spark, monkeypatch):
     """Every block-pair operator is ONE grouped-map pass: the formatted
-    plan of knn_graph, embedding_near_dup_pairs_fast and
-    knn_graph_incremental (three grids, one kernel) carries exactly one
-    FlatMapGroupsInPandas. A second one means a grid got its own pass,
-    or the kernel output gained a second consumer (Spark re-runs the
-    Python stage per consumer)."""
+    plan of knn_graph, embedding_near_dup_pairs_fast,
+    knn_graph_incremental (three grids, one kernel) and semdedup_prune
+    (one group per cluster) carries exactly one FlatMapGroupsInPandas,
+    built by exactly one ``_score_blocks`` call. A second stage means a
+    grid got its own pass, or the kernel output gained a second consumer
+    (Spark re-runs the Python stage per consumer); a missing call means
+    the operator scores pairs with a kernel of its own."""
     import contextlib
     import io
     import re
 
     from quantum_rag_data_pipeline_spark.operators import similarity as sim
 
+    calls = []
+    kernel = sim._score_blocks
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return kernel(*args, **kwargs)
+
+    monkeypatch.setattr(sim, "_score_blocks", spy)
     rows = [(i, [float((i * 7 + j) % 5 + 1) for j in range(8)]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    plans = {
-        "knn_graph": sim.knn_graph(df, k=3, dim=8, n_blocks=3),
-        "embedding_near_dup_pairs_fast": sim.embedding_near_dup_pairs_fast(
+    cents = df.filter("vec_id < 3").withColumnRenamed("vec_id", "centroid_id")
+    builders = {
+        "knn_graph": lambda: sim.knn_graph(df, k=3, dim=8, n_blocks=3),
+        "embedding_near_dup_pairs_fast": lambda: sim.embedding_near_dup_pairs_fast(
             df, dim=8, threshold=0.8, n_blocks=3),
-        "knn_graph_incremental": sim.knn_graph_incremental(
+        "knn_graph_incremental": lambda: sim.knn_graph_incremental(
             df.filter("vec_id % 4 <> 0"), df.filter("vec_id % 4 = 0"), k=3, dim=8),
+        "semdedup_prune": lambda: sim.semdedup_prune(df, cents, dim=8, threshold=0.8),
     }
-    for name, out in plans.items():
+    for name, build in builders.items():
+        calls.clear()
+        out = build()
+        assert len(calls) == 1, f"{name}: {len(calls)} _score_blocks calls"
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             out.explain("formatted")
         plan = buf.getvalue()
         n = len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M))
         assert n == 1, f"{name}: {n} grouped-map stages\n{plan}"
+
+
+def test_pair_kernel_scores_only_dim_components(spark):
+    """The ``dim`` contract of the block-pair kernel: only the first
+    ``dim`` components count, in the gram prefilter as in the exact
+    score. Rows are 8 wide and scored at dim=4; their trailing
+    components push pairs below the threshold at full width (rows 1 and
+    2: cosine 0.038 at 8 wide, 1.0 at 4 wide), so a full-width prefilter
+    drops them. The fast path and semdedup_prune must equal the
+    brute-force row-wise operator at dim=4."""
+    import pytest
+
+    from quantum_rag_data_pipeline_spark.operators import similarity as sim
+
+    vecs = [
+        [1, 0, 0, 0, 5, 0, 0, 0],    # 1 ~ 2 only on the first 4
+        [1, 0, 0, 0, 0, 5, 0, 0],
+        [1, .1, 0, 0, 0, 0, 5, 0],   # 3 ~ 1, 2 only on the first 4
+        [0, 1, 0, 0, 0, 0, 0, 5],    # 4 ~ 5 only on the first 4
+        [0, 1, 0, 0, 5, 5, 0, 0],
+        [0, 0, 1, 0, 0, 0, 0, 0],    # alone
+        [0, 0, 0, 1, 3, 0, 0, 0],    # 7 ~ 8 only on the first 4
+        [0, 0, 0, 1, 0, 0, 3, 0],
+    ]
+    vecs = [[float(x) for x in v] for v in vecs]
+    df = spark.createDataFrame(list(enumerate(vecs, start=1)),
+                               "vec_id long, embedding array<double>")
+    brute = sorted(map(tuple, sim.embedding_near_dup_pairs(df, threshold=0.9, dim=4).collect()))
+    assert {(a, b) for a, b, _ in brute} == {(1, 2), (1, 3), (2, 3), (4, 5), (7, 8)}
+    for n_blocks in (1, 3):
+        fast = sorted(map(tuple, sim.embedding_near_dup_pairs_fast(
+            df, dim=4, threshold=0.9, n_blocks=n_blocks).collect()))
+        assert fast == brute, n_blocks
+
+    cents = df.filter("vec_id IN (1, 4)").withColumnRenamed("vec_id", "centroid_id")
+    assigned = sim.assign_to_centroids(df, cents, 4).select("vec_id", "centroid_id")
+    blocked = sim.embedding_near_dup_pairs(
+        assigned.join(df, "vec_id"), threshold=0.9, block_col="centroid_id", dim=4)
+    removed = {r.id_b for r in blocked.collect()}
+    want = sorted((r.vec_id, r.centroid_id, r.vec_id in removed) for r in assigned.collect())
+    got = sorted(map(tuple, sim.semdedup_prune(df, cents, dim=4, threshold=0.9).collect()))
+    assert got == want
+    assert {v for v, _, rm in got if rm} == {2, 3, 5, 8}
+    # a centroid id the group encoding cannot hold fails, never prunes silently
+    with pytest.raises(Exception, match="centroid_id outside"):
+        sim.semdedup_prune(df, cents.selectExpr("-centroid_id AS centroid_id", "embedding"),
+                           dim=4, threshold=0.9).collect()
 
 
 def test_connected_components_empty_edge_list(spark):

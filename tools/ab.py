@@ -12,8 +12,7 @@ scale-factor directory comes from ``$SPARK_GRAFT_SF_DIR`` (required)
 and the core count from ``$SPARK_GRAFT_CPUS``, as in bench.py::
 
     python tools/ab.py 281de49~1 281de49 kendall_tau_blocked
-    python tools/ab.py . .+SPARK_GRAFT_BCAST_MAX_ROWS=0 \\
-        dbscan_core_border_noise semdedup_prune
+    python tools/ab.py . .+SPARK_GRAFT_BCAST_MAX_ROWS=0 dbscan_core_border_noise
 
 Each pair runs one child process per arm, A first in even pairs and B
 first in odd ones, after one ``era_probe()``. A child starts a

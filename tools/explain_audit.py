@@ -34,8 +34,8 @@ UDF_EXPECTED = {"ann_lsh_topk", "multimodal_features", "multimodal_resize_and_fr
                 "group_trend_ols",
                 # round 4 wave: block-pair matmul candidate generation
                 "knn_graph_mutual", "knn_graph_incremental_parity",
-                # round 10: the intra-cluster scan is one BLAS gram per
-                # cluster (applyInPandas diagonal case + exact rescore)
+                # the intra-cluster scan is the block-pair kernel with
+                # one group per cluster (similarity._score_blocks)
                 "semdedup_prune",
                 # round 11: the kmeans E-step is a BLAS mapInPandas
                 # assignment (replaced the N-by-k interpreted column
