@@ -50,42 +50,28 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
-
-    PERF TRAP: Catalyst does not common-subexpression-eliminate into
-    higher-order-function lambdas, so the ``tokens()`` regex split
-    captured by the ``transform`` below re-evaluates PER SHINGLE when
-    this compound expression is used directly over a raw text column
-    (measured: 5000 docs x ~47 shingles = 3.1 s vs 0.6 s at sf0.1).
-    Inside this package always go through ``tokenized`` +
-    ``shingles_of_tokens`` so the lambda captures a bound attribute;
-    this function stays for single-expression convenience and API
-    compatibility."""
-    toks = tokens(col)
-    return _shingles_expr(toks, n)
+def tokenized(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, _toks) projection — materializes the tokenization ONCE so
+    downstream shingle lambdas capture a cheap bound reference instead of
+    re-running the regex split per element. Catalyst does not eliminate
+    common subexpressions into higher-order-function lambdas: a shingle
+    ``transform`` over ``tokens(text)`` itself re-splits the text per
+    shingle (measured: 5000 docs x ~47 shingles = 3.1 s vs 0.6 s at
+    sf0.1). CollapseProject will not re-inline ``_toks``: it is
+    multi-referenced in every consumer."""
+    return df.select(F.col(id_col), tokens(text_col).alias("_toks"))
 
 
-def _shingles_expr(toks: Column, n: int) -> Column:
+def shingles_of_tokens(n: int = 3, toks_col: str = "_toks") -> Column:
+    """Distinct word n-gram shingles (array<string>) of a pre-materialized
+    token-array column; a doc shorter than ``n`` words is one shingle."""
+    toks = F.col(toks_col)
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.when(F.size(toks) >= n,
         F.array_distinct(
             F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
         )
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def tokenized(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, _toks) projection — materializes the tokenization ONCE so
-    downstream shingle lambdas capture a cheap bound reference instead of
-    re-running the regex split per element. CollapseProject will not
-    re-inline it: ``_toks`` is multi-referenced in every consumer."""
-    return df.select(F.col(id_col), tokens(text_col).alias("_toks"))
-
-
-def shingles_of_tokens(n: int = 3, toks_col: str = "_toks") -> Column:
-    """Shingle expression over a pre-materialized token-array column."""
-    return _shingles_expr(F.col(toks_col), n)
 
 
 def shingle_index(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3,
@@ -96,21 +82,77 @@ def shingle_index(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     idx = tokenized(df, text_col, id_col).select(
         F.col(id_col), F.explode(shingles_of_tokens(n)).alias("shingle")
     )
-    if max_df is not None:
-        from pyspark.sql.window import Window
+    return idx if max_df is None else _df_counted(idx, max_df).drop("df_count")
 
-        # df count via a window over the exploded index — ONE evaluation
-        # of the shingle explode and one shuffle; the old groupBy-counts +
-        # join-back form consumed the explode lineage twice (the same fix
-        # ngram_jaccard_pairs got in round 6, applied here in round 10).
-        idx = (
-            idx.withColumn(
-                "df_count", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-            )
-            .filter(F.col("df_count") <= max_df)
-            .drop("df_count")
+
+def _df_counted(idx: DataFrame, max_df: int | None) -> DataFrame:
+    """An (id, shingle) index with each shingle's document frequency
+    ``df_count``, rows over ``max_df`` (if given) dropped. A window over the
+    exploded index evaluates the shingle explode once, in one shuffle;
+    a groupBy-counts + join-back form consumed the explode lineage twice
+    (measured: 8 s -> ~3 s for the index stage at sf0.1). The window
+    count equals the global df, so the ``max_df`` cut is exact and the
+    (df_count, shingle) order is one total order across docs."""
+    from pyspark.sql.window import Window
+
+    idx = idx.withColumn("df_count", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+    return idx if max_df is None else idx.filter(F.col("df_count") <= max_df)
+
+
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int,
+                  max_df: int | None) -> DataFrame:
+    """(id, sh, sz): each doc's post-``max_df`` shingle set ``sh`` in the
+    global rarest-first order (ascending df_count, ties by shingle) and
+    its size. ONE groupBy packs it (sort_array on (df_count, shingle)
+    structs), so a PPJoin prefix is a slice of ``sh`` and the same array
+    serves the verification intersections.
+
+    Not cached: its consumers (the prefix explode and the verification
+    joins) read the groupBy's shuffle back as a ``ReusedExchange``, and a
+    cache makes the set a separate adaptive plan (``dedup_ngram_jaccard``
+    at sf0.1, 4 cores: 10 jobs and 261 tasks cached, 5 and 17 without)."""
+    return (
+        _df_counted(shingle_index(df, text_col, id_col, n), max_df)
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_list(F.struct("df_count", "shingle"))).alias("_ord"))
+        .select(
+            F.col(id_col),
+            F.transform("_ord", lambda s: s["shingle"]).alias("sh"),
+            F.size("_ord").alias("sz"),
         )
-    return idx
+    )
+
+
+def _candidate_pairs(rows: DataFrame, keys: list[str], id_col: str,
+                     carry: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct (id_a, id_b) with id_a < id_b over the pairs of ``rows``
+    that agree on ``keys``: the blocking self-join of every near-dup tier.
+    Each ``carry`` column c rides along as c_a and c_b."""
+    sides = (("x", "a"), ("y", "b"))
+    return (
+        rows.alias("x")
+        .join(rows.alias("y"), keys)
+        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+        .select(
+            F.col(f"x.{id_col}").alias("id_a"),
+            F.col(f"y.{id_col}").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{t}") for c in carry for s, t in sides],
+        )
+        .distinct()
+    )
+
+
+def _jaccard_of(cand: DataFrame, sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of the candidate pairs whose exact Jaccard
+    on the ``sh`` arrays of ``sets`` is at least ``threshold``."""
+    return (
+        cand.join(sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn("jaccard", F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -136,49 +178,7 @@ def ngram_jaccard_pairs(
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard ≥ threshold.
     """
-    # document frequencies via a window over the exploded index — ONE
-    # evaluation of the (expensive) shingling expression and one shuffle,
-    # where the old groupBy-counts + self-join form re-evaluated the
-    # explode twice (measured: 8s -> ~3s for the index stage at sf0.1).
-    # The window count equals the global df, so the max_df cut is
-    # unchanged and the (df_count, shingle) total order stays consistent
-    # across docs — all PPJoin needs.
-    from pyspark.sql.window import Window
-
-    raw = tokenized(df, text_col, id_col).select(
-        F.col(id_col), F.explode(shingles_of_tokens(n)).alias("shingle")
-    )
-    idx = raw.withColumn(
-        "df_count", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-    )
-    if max_df is not None:
-        idx = idx.filter(F.col("df_count") <= max_df)
-    # ONE groupBy packs each doc's shingles in global rarest-first order
-    # (sort_array on (df_count, shingle) structs — no window functions);
-    # the prefix is then just a slice of that array, and the same array
-    # serves the verification intersections.
-    packed = (
-        idx
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list(F.struct("df_count", "shingle"))).alias("_ord"))
-        .select(
-            F.col(id_col),
-            F.transform("_ord", lambda s: s["shingle"]).alias("sh"),
-            F.size("_ord").alias("sz"),
-        )
-        # Three plan branches consume packed (prefix explode + both sides of
-        # the verification join) and Spark's exchange reuse doesn't unify
-        # them — without this the scan+explode+count-join+collect_list
-        # lineage runs 3x (measured: 16 parquet scans / 13 s at sf0.1 vs 2
-        # scans / ~5 s). cache() materializes once inside the SAME action
-        # (honest timing, still one DAG) without localCheckpoint's eager
-        # driver-side physical planning. CACHE LIFETIME CAVEAT: cache()
-        # entries live in the CacheManager until unpersist/clearCache —
-        # long-lived sessions invoking many corpus queries must clear
-        # periodically (bench.py / tools/oracle_check.py / explain_audit
-        # do; the round-1 persist() leak degraded later queries 2-4x).
-        .cache()
-    )
+    sets = _shingle_sets(df, text_col, id_col, n, max_df)
     # epsilon guards the float ceil: it can only LENGTHEN the prefix,
     # never shorten it, so exactness is preserved.
     plen = F.col("sz") - F.ceil(F.col("sz") * threshold - 1e-9) + 1
@@ -194,25 +194,10 @@ def ngram_jaccard_pairs(
     # the verified output is set-identical (pinned by
     # tests/test_independent_replication22.py and the hashed-vs-string
     # A/B equality check recorded in OPTIMIZATION_r14.md §15).
-    prefix = packed.select(
+    prefix = sets.select(
         F.col(id_col), F.explode(F.slice("sh", 1, plen.cast("int"))).alias("shingle")
     ).select(F.col(id_col), F.xxhash64("shingle").alias("_shk"))
-    cand = (
-        prefix.alias("x")
-        .join(prefix.alias("y"), "_shk")
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("id_a"), F.col(f"y.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sets_ = packed.select(F.col(id_col), "sh")
-    return (
-        cand.join(sets_.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sets_.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_of(_candidate_pairs(prefix, ["_shk"], id_col), sets, id_col, threshold)
 
 
 def minhash_signatures(
@@ -317,13 +302,7 @@ def minhash_lsh_pairs(
         F.col(id_col),
         F.expr(f"posexplode(array({band_hashes}))").alias("band", "band_hash"),
     )
-    cand = (
-        buckets.alias("x")
-        .join(buckets.alias("y"), ["band", "band_hash"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("id_a"), F.col(f"y.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _candidate_pairs(buckets, ["band", "band_hash"], id_col)
     # estimate Jaccard = fraction of agreeing minhashes (unbiased estimator)
     est = (
         cand.join(sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
@@ -364,37 +343,22 @@ def minhash_lsh_exact_pairs(
     candidates meet via a (band, min_value) equi-join, and only candidate
     pairs ever touch the shingle arrays."""
     # ONE tokenize+shingle pass funds BOTH the signatures and the exact
-    # verification (round 15): sets_ materializes the per-doc shingle
-    # arrays once (cache — the verification join consumes it twice, and
-    # shingling is the expensive expression; lifetime caveat: see
-    # ngram_jaccard_pairs), and the signature aggregate explodes the
-    # cached arrays instead of re-running tokenize+shingle over the
-    # corpus a second time. Signatures are identical by construction
-    # (same distinct arrays, same fixed-seed hash family).
+    # verification (round 15): the signature aggregate explodes the
+    # per-doc shingle arrays of sets_ instead of re-running
+    # tokenize+shingle over the corpus a second time. Signatures are
+    # identical by construction (same distinct arrays, same fixed-seed
+    # hash family). Both materializations stay (tools/ab.py, sf0.1, 4
+    # cores, dedup_minhash_lsh): without the checkpoint 1.52 -> 1.70 s
+    # median over 10 pairs (with it won 7/10); without either 1.68 ->
+    # 4.88 s in a 4-pair sizing run.
     sets_ = tokenized(df, text_col, id_col).select(
         F.col(id_col), shingles_of_tokens(n).alias("sh")
     ).cache()
     sig = minhash_signatures_of_shingles(sets_, id_col, "sh", num_hashes) \
         .localCheckpoint(eager=False)  # banding consumes sig twice (x/y aliases)
     buckets = sig.select(F.col(id_col), F.posexplode("sig").alias("band", "band_hash"))
-    cand = (
-        buckets.alias("x")
-        .join(buckets.alias("y"), ["band", "band_hash"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("id_a"), F.col(f"y.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return (
-        cand.join(sets_.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sets_.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    cand = _candidate_pairs(buckets, ["band", "band_hash"], id_col)
+    return _jaccard_of(cand, sets_, id_col, threshold)
 
 
 def simhash64_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -457,18 +421,7 @@ def simhash_pairs_from_codes(
             ])
         ).alias("chunk_idx", "chunk_val"),
     )
-    cand = (
-        chunk_rows.alias("x")
-        .join(chunk_rows.alias("y"), ["chunk_idx", "chunk_val"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-            F.col("x.sh").alias("sh_a"),
-            F.col("y.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
+    cand = _candidate_pairs(chunk_rows, ["chunk_idx", "chunk_val"], id_col, carry=("sh",))
     return (
         cand.withColumn("hamming", hamming64(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("hamming") <= max_hamming)
@@ -486,10 +439,11 @@ def simhash_pairs(
     """SimHash near-dup: pairs within ``max_hamming`` bits. Defaults are
     the classic (3, 4): 16-bit chunks, guarantee-sound since 4 > 3.
     See simhash_pairs_from_codes for the blocking contract."""
-    # The chunk_rows self-join consumes the 64-vote aggregate twice and
-    # exchange reuse does not unify the two branches (measured 0
-    # ReusedExchange) — cache() computes the codes once (localCheckpoint
-    # did eager physical planning on the driver, ~0.5-1 s per call).
-    # Lifetime caveat: see ngram_jaccard_pairs.
+    # The chunk_rows self-join consumes the 64-vote aggregate twice.
+    # Cache-free, adaptive execution reads its shuffle back as one
+    # ReusedExchange, but the cached codes are still faster: tools/ab.py
+    # (10 pairs, sf0.1, 4 cores) timed dedup_simhash at 2.04 s cached and
+    # 2.49 s without (cached won 10/10). localCheckpoint did eager
+    # physical planning on the driver, ~0.5-1 s per call.
     sh = simhash64_df(df, text_col, id_col).cache()
     return simhash_pairs_from_codes(sh, id_col, "sh", max_hamming, blocks)

@@ -1181,7 +1181,8 @@ def semdedup_prune(
     # re-run the whole E-step per invocation; cache() materializes the
     # (id, cluster) table once. It is the artifact a production SemDeDup
     # run persists anyway (n rows x 16 bytes — the smallest frame in the
-    # pipeline). Same CacheManager lifetime caveat as ngram_jaccard_pairs.
+    # pipeline). Its CacheManager entry lives until clearCache (README,
+    # "Cache lifetime contract").
     assigned = assign_to_centroids(
         vectors, centroids, dim, id_col=id_col, vec_col=vec_col
     ).select(id_col, "centroid_id").cache()

@@ -2735,8 +2735,6 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle ever meet) with the max_df=64 boilerplate cut bounding the
     candidate fan-out at corpus scale."""
     d = _t(spark, sf_dir, "documents")
-    from pyspark.sql.window import Window
-
     # PREFIX FILTERING for containment (round 10): the full x full
     # postings self-join generated every co-occurring pair; exactness
     # only needs each doc's RAREST-FIRST PREFIX of length
@@ -2748,25 +2746,10 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides is a superset of the smaller-side requirement, so no pair is
     # lost. At t=0.8 the probe stream is ~20% of the postings — the same
     # PPJoin idea ngram_jaccard_pairs uses, adapted to the asymmetric
-    # threshold. Same global rarest-first order ((df_count, shingle)
-    # structs), same one-window df computation, one cache for the three
-    # consumers (prefix probe, full side, verification sets).
-    raw = dedup_ops.tokenized(d, "text", "doc_id").select(
-        F.col("doc_id"), F.explode(dedup_ops.shingles_of_tokens(5)).alias("shingle")
-    )
-    idx = raw.withColumn(
-        "df_count", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-    ).filter(F.col("df_count") <= 64)
-    packed = (
-        idx.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df_count", "shingle"))).alias("_ord"))
-        .select(
-            "doc_id",
-            F.transform("_ord", lambda s: s["shingle"]).alias("sh"),
-            F.size("_ord").alias("sz"),
-        )
-        .cache()
-    )
+    # threshold, over the same rarest-first shingle sets (uncached: the
+    # prefix probe, the full side and the verification sets read their
+    # groupBy's shuffle back as a ReusedExchange).
+    packed = dedup_ops._shingle_sets(d, "text", "doc_id", 5, 64)
     # epsilon only LENGTHENS the prefix (ceil(t*sz - eps) <= ceil(t*sz)),
     # so exactness is preserved.
     plen = F.col("sz") - F.ceil(F.col("sz") * 0.8 - 1e-9) + 1

@@ -70,39 +70,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-class cache_scope:
-    """Bound the lifetime of internal ``.cache()`` entries.
-
-    Several corpus queries cache a mid-plan frame that several plan
-    branches consume: ``ngram_jaccard_pairs``, ``minhash_lsh_exact_pairs``
-    and ``simhash_pairs`` in ``operators/dedup.py``, ``semdedup_prune`` in
-    ``operators/similarity.py``. (``minhash_lsh_pairs`` caches nothing:
-    adaptive execution reuses its signature shuffle across its branches,
-    see the comment there.) Spark's CacheManager keeps those entries
-    until ``clearCache``/``unpersist`` — they are NOT reclaimed by the
-    ContextCleaner like checkpoint RDDs — so a long-lived session that
-    invokes many corpus queries without clearing accumulates them and
-    degrades later queries 2-4x (measured, round 1). The in-repo
-    harnesses (bench.py, tools/oracle_check.py, tools/explain_audit.py,
-    tools/scale_curve.py) clear per query; external callers get the same
-    guarantee with::
-
-        with cache_scope(spark):
-            rows = QUERIES["dedup_minhash_lsh"](spark, sf_dir).collect()
-        # all cache entries created inside the scope are gone here
-
-    The exit clears the session's ENTIRE cache (the CacheManager is not
-    enumerable from Python, so scoped-only unpersist isn't expressible);
-    callers holding their own long-lived cached frames should unpersist
-    per-frame instead.
-    """
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-
-    def __enter__(self) -> SparkSession:
-        return self._spark
-
-    def __exit__(self, *exc) -> None:
-        self._spark.catalog.clearCache()

@@ -93,6 +93,69 @@ def test_touched_queries_maps_hunks_to_registered_names(tmp_path):
                    .replace("x + 1", "x + 2")) == set()
 
 
+_LIBRARY = '''"""A library module."""
+
+
+def _inner(x):
+    return x + 1
+
+
+def outer(x):
+    return _inner(x) * 2
+
+
+def other(x):
+    return x - 1
+'''
+
+_CALLERS = '''from quantum_rag_data_pipeline_spark.operators import lib as ops
+
+
+@query("uses_outer")
+def _a(spark, sf_dir):
+    return ops.outer(1)
+
+
+@query("uses_other")
+def _b(spark, sf_dir):
+    from quantum_rag_data_pipeline_spark.operators.lib import other
+
+    return other(1)
+'''
+
+
+def test_touched_queries_maps_library_hunks_to_their_callers(tmp_path):
+    """A hunk in a top-level library function marks every @query that
+    loads it, directly or through another library function (an attribute
+    or a from-import counts); a deleted function marks its callers too,
+    and a hunk outside any function marks none."""
+    round_gate = _tool("round_gate")
+    lib = tmp_path / round_gate.PKG / "operators" / "lib.py"
+    seg = tmp_path / round_gate.QUERIES_DIR / "segment.py"
+    for path, text in ((lib, _LIBRARY), (seg, _CALLERS)):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+
+    def git(*args):
+        subprocess.run(["git", "-C", str(tmp_path), "-c", "user.name=t",
+                        "-c", "user.email=t@t", *args],
+                       check=True, capture_output=True)
+
+    git("init", "-q")
+    git("add", "-A")
+    git("commit", "-qm", "base")
+
+    def touched(text):
+        lib.write_text(text)
+        return round_gate.touched_queries("HEAD", repo=str(tmp_path))
+
+    assert touched(_LIBRARY) == set()
+    assert touched(_LIBRARY.replace("x + 1", "x + 2")) == {"uses_outer"}
+    assert touched(_LIBRARY.replace("x - 1", "x - 2")) == {"uses_other"}
+    assert touched(_LIBRARY.replace("def other(x):\n    return x - 1\n", "")) == {"uses_other"}
+    assert touched(_LIBRARY.replace("A library", "One library")) == set()
+
+
 def _child(t, hash_="h"):
     """One child's record of a query whose fastest of three runs took t s."""
     runs = [{"build_s": 0.1, "exec_s": x - 0.1, "build_py4j": 10} for x in (t + 0.3, t, t + 0.1)]

@@ -4,7 +4,8 @@ caller: a function, class or (non-dunder) module-level name defined in
 ``streaming/`` must be loaded by name somewhere outside its own
 definition — in the package, ``tools/``, ``perfbench/``, ``bench.py`` or
 ``tests/``. A name, an attribute access or a ``from ... import`` counts;
-a mention in a docstring or comment does not. Pure ``ast``: no Spark.
+a mention in a docstring or comment does not (the name matching of
+``tools/round_gate.loads``). Pure ``ast``: no Spark.
 """
 
 from __future__ import annotations
@@ -13,9 +14,10 @@ import ast
 from collections import defaultdict
 from pathlib import Path
 
+from tools.round_gate import LIBRARY_DIRS, loads
+
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "quantum_rag_data_pipeline_spark"
-LIBRARY_DIRS = ("operators", "sources", "sinks", "functions", "plans", "streaming")
 
 
 def _py_files() -> list[Path]:
@@ -34,24 +36,12 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
     return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
 
 
-def _loads(tree: ast.AST):
-    """(name, line) of every load by name in ``tree``."""
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            yield node.id, node.lineno
-        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
-            yield node.attr, node.lineno
-        elif isinstance(node, ast.ImportFrom):
-            for alias in node.names:
-                yield alias.name, node.lineno
-
-
 def unreferenced() -> list[str]:
     trees = {f: ast.parse(f.read_text(), str(f)) for f in _py_files()}
-    loads: dict[str, list[tuple[Path, int]]] = defaultdict(list)
+    loaded: dict[str, list[tuple[Path, int]]] = defaultdict(list)
     for f, tree in trees.items():
-        for name, line in _loads(tree):
-            loads[name].append((f, line))
+        for name, line in loads(tree):
+            loaded[name].append((f, line))
     dead = []
     for f, tree in trees.items():
         rel = f.relative_to(PKG) if f.is_relative_to(PKG) else None
@@ -60,7 +50,7 @@ def unreferenced() -> list[str]:
         for stmt in tree.body:
             span = range(stmt.lineno, stmt.end_lineno + 1)
             for name in _defined_names(stmt):
-                if not any(g != f or line not in span for g, line in loads[name]):
+                if not any(g != f or line not in span for g, line in loaded[name]):
                     dead.append(f"{rel}:{stmt.lineno} {name}")
     return dead
 

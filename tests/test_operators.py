@@ -11,8 +11,9 @@ from quantum_rag_data_pipeline_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    shingles_of_tokens,
     simhash_pairs,
-    word_shingles,
+    tokenized,
 )
 from quantum_rag_data_pipeline_spark.operators.text import lang_id, quality_metrics, token_count
 from quantum_rag_data_pipeline_spark.sources.ercot import (
@@ -135,12 +136,11 @@ def test_exact_dedup_keeps_lowest_id(spark):
 
 
 def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], "t string")
-    sh = df.select(word_shingles("t", 3).alias("s")).collect()[0]["s"]
-    assert sorted(sh) == ["a b c", "b c d"]
-    short = spark.createDataFrame([("a b",)], "t string")
-    sh2 = short.select(word_shingles("t", 3).alias("s")).collect()[0]["s"]
-    assert sh2 == ["a b"]
+    df = spark.createDataFrame([(1, "a b c d"), (2, "a b")], "doc_id long, t string")
+    rows = tokenized(df, "t").select("doc_id", shingles_of_tokens(3).alias("s")).collect()
+    sh = {r["doc_id"]: r["s"] for r in rows}
+    assert sorted(sh[1]) == ["a b c", "b c d"]
+    assert sh[2] == ["a b"]
 
 
 def test_ngram_jaccard_hashed_candidate_key(spark):
@@ -187,6 +187,23 @@ def test_ngram_jaccard_hashed_candidate_key(spark):
     plan = buf.getvalue()
     assert "xxhash64(shingle" in plan, "candidate join key regressed to strings"
     assert "array_intersect" in plan, "exact verification missing"
+    spark.catalog.clearCache()
+
+
+def test_shingle_set_queries_reuse_the_shuffle_uncached(spark, sf_dir):
+    """The rarest-first shingle sets are not cached: the final adaptive
+    plans of the n-gram Jaccard and containment queries hold no cached
+    relation and read the sets' shuffle back as a ``ReusedExchange``."""
+    from quantum_rag_data_pipeline_spark.queries import QUERIES
+    from tools.ab import _plan_ops
+
+    for name in ("dedup_ngram_jaccard", "dedup_shingle_containment"):
+        spark.catalog.clearCache()
+        df = QUERIES[name](spark, sf_dir)
+        df.toArrow()
+        ops = _plan_ops(df, final=True)
+        assert "InMemoryRelation" not in ops and "TableCacheQueryStage" not in ops, (name, ops)
+        assert ops.get("ReusedExchange", 0) >= 1, (name, ops)
     spark.catalog.clearCache()
 
 
@@ -1018,29 +1035,6 @@ def test_dot_fast_path_skips_plan_bound_columns(spark):
     [row3] = df1.select(sim_ops.dot(F.col("v"), F.col("v"), 2).alias("d")).collect()
     assert row3.d == 9.0
     assert ("v", "v", 2) in sim_ops._dot_cache_for_session()
-
-
-def test_cache_scope_releases_entries(spark):
-    """Round-5 advisor item: external long-lived sessions need an
-    in-library guard for the CacheManager-accumulation failure mode.
-    cache_scope must leave the session cache empty on exit, success or
-    raise."""
-    import pytest
-
-    from quantum_rag_data_pipeline_spark.session import cache_scope
-
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    with cache_scope(spark):
-        df = spark.range(100).cache()
-        assert df.count() == 100
-        assert not jcm.isEmpty()
-    assert jcm.isEmpty()
-
-    with pytest.raises(RuntimeError):
-        with cache_scope(spark):
-            spark.range(10).cache().count()
-            raise RuntimeError("boom")
-    assert jcm.isEmpty()
 
 
 def test_copurchase_edges_memo_respects_with_counts(spark, sf_dir):

@@ -369,7 +369,7 @@ def test_adaptive_broadcast_gate_and_override(spark):
         del os.environ["SPARK_GRAFT_BCAST_MAX_ROWS"]
 
 
-def test_dbscan_semdedup_identical_under_both_join_shapes(spark, sf_dir):
+def test_dbscan_identical_under_both_join_shapes(spark, sf_dir):
     """Judge item 2 (round 11): the rescore-join strategy — broadcast
     hint vs unhinted co-partitioned shuffle join — must be a pure
     physical choice. Forcing the non-broadcast shape via the env bound
@@ -377,12 +377,9 @@ def test_dbscan_semdedup_identical_under_both_join_shapes(spark, sf_dir):
     import os
 
     base_db = QUERIES["dbscan_core_border_noise"](spark, sf_dir).collect()
-    base_sd = sorted(QUERIES["semdedup_prune"](spark, sf_dir).collect())
     os.environ["SPARK_GRAFT_BCAST_MAX_ROWS"] = "0"
     try:
         nb_db = QUERIES["dbscan_core_border_noise"](spark, sf_dir).collect()
-        nb_sd = sorted(QUERIES["semdedup_prune"](spark, sf_dir).collect())
     finally:
         del os.environ["SPARK_GRAFT_BCAST_MAX_ROWS"]
     assert nb_db == base_db
-    assert nb_sd == base_sd

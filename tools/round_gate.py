@@ -7,9 +7,10 @@
 ``REF`` is the round's base commit. The ``ab`` gate A/B-times the
 queries the round touched against it, with ``$SPARK_GRAFT_SF_DIR`` as
 the scale-factor directory (required unless ``ab`` is skipped). A touched
-query is a ``@query`` function whose lines the ``git diff -U0 REF`` of
-``quantum_rag_data_pipeline_spark/queries/`` adds, changes or deletes
-(see ``touched_queries``); the ``QUERY`` names are added to that set.
+query is a ``@query`` function whose lines the ``git diff -U0 REF`` adds,
+changes or deletes, or one that loads a touched top-level definition of
+the library modules, directly or through other library definitions (see
+``touched_queries``); the ``QUERY`` names are added to that set.
 
 Runs, in this order (fail-fast OFF — all gates always run so one broken
 gate doesn't hide another; exit code is nonzero if ANY failed):
@@ -44,23 +45,50 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PY = sys.executable
-QUERIES_DIR = "quantum_rag_data_pipeline_spark/queries/"
+PKG = "quantum_rag_data_pipeline_spark/"
+QUERIES_DIR = PKG + "queries/"
+LIBRARY_DIRS = ("operators", "sources", "sinks", "functions", "plans", "streaming")
 _HUNK = re.compile(r"^@@ -(\d+)(?:,(\d+))? \+(\d+)(?:,(\d+))? @@", re.M)
 
 
-def query_spans(source: str) -> list[tuple[int, int, str]]:
-    """``(first, last, name)`` line spans of the ``@query("name", ...)``
-    functions in a module's source, decorators included."""
-    spans = []
-    for node in ast.walk(ast.parse(source)):
+def loads(tree: ast.AST):
+    """(name, line) of every load by name in ``tree``: a Name, an
+    attribute access or a ``from ... import``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.ImportFrom):
+            for alias in node.names:
+                yield alias.name, node.lineno
+
+
+def _queries(tree: ast.AST):
+    """(function node, registered name) of each ``@query("name", ...)``."""
+    for node in ast.walk(tree):
         if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
         for dec in node.decorator_list:
             if (isinstance(dec, ast.Call) and getattr(dec.func, "id", "") == "query"
                     and dec.args and isinstance(dec.args[0], ast.Constant)):
-                spans.append((node.decorator_list[0].lineno, node.end_lineno,
-                              dec.args[0].value))
-    return spans
+                yield node, dec.args[0].value
+
+
+def query_spans(source: str) -> list[tuple[int, int, str]]:
+    """``(first, last, name)`` line spans of the ``@query("name", ...)``
+    functions in a module's source, decorators included."""
+    return [(node.decorator_list[0].lineno, node.end_lineno, name)
+            for node, name in _queries(ast.parse(source))]
+
+
+def definition_spans(source: str) -> list[tuple[int, int, str]]:
+    """``(first, last, name)`` line spans of a module's top-level
+    functions and classes, decorators included."""
+    return [(min([d.lineno for d in node.decorator_list] + [node.lineno]),
+             node.end_lineno, node.name)
+            for node in ast.parse(source).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
 
 
 def hunk_lines(diff: str) -> tuple[set[int], set[int]]:
@@ -74,32 +102,68 @@ def hunk_lines(diff: str) -> tuple[set[int], set[int]]:
     return old, new
 
 
-def names_at(source: str, lines: set[int]) -> set[str]:
-    return {name for first, last, name in query_spans(source)
+def names_at(spans: list[tuple[int, int, str]], lines: set[int]) -> set[str]:
+    return {name for first, last, name in spans
             if any(first <= ln <= last for ln in lines)}
+
+
+def queries_loading(touched: set[str], repo: str = REPO) -> set[str]:
+    """Registered names of the ``@query`` functions that load a name in
+    ``touched`` or a library definition that does, closed over the
+    library's own loads. Names match by name alone, as in
+    ``tests/test_no_dead_definitions.py``: a shared name can only add a
+    query to time, never drop one."""
+    root = os.path.join(repo, PKG)
+    trees = {}  # top-level directory under the package -> module trees
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(d, f)) as fh:
+                    top = os.path.relpath(os.path.join(d, f), root).split(os.sep)[0]
+                    trees.setdefault(top, []).append(ast.parse(fh.read()))
+    defs = [(node.name, {n for n, _ in loads(node)})
+            for top in LIBRARY_DIRS for tree in trees.get(top, [])
+            for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
+    closed, grew = set(touched), True
+    while grew:
+        grew = False
+        for name, used in defs:
+            if name not in closed and used & closed:
+                closed.add(name)
+                grew = True
+    return {name for tree in trees.get("queries", [])
+            for node, name in _queries(tree) if {n for n, _ in loads(node)} & closed}
 
 
 def touched_queries(base: str, repo: str = REPO) -> set[str]:
     """Registered names of the ``@query`` functions whose lines the
-    working tree adds, changes or deletes relative to ``base``: the new
-    side of each hunk is matched against the file as it is, the old side
-    against the file at ``base``."""
+    working tree adds, changes or deletes relative to ``base``, and of
+    those that load a top-level library definition whose lines it
+    touches (see ``queries_loading``). The new side of each hunk is
+    matched against the file as it is, the old side against the file at
+    ``base``."""
     def git(*args):
         return subprocess.run(["git", "-C", repo, *args], capture_output=True,
                               text=True, check=True).stdout
 
-    names = set()
-    for path in git("diff", "--name-only", base, "--", QUERIES_DIR).split():
+    names, library = set(), set()
+    libs = [PKG + d for d in LIBRARY_DIRS]
+    for path in git("diff", "--name-only", base, "--", QUERIES_DIR, *libs).split():
         if not path.endswith(".py"):
             continue
+        in_queries = path.startswith(QUERIES_DIR)
+        spans = query_spans if in_queries else definition_spans
+        hit = set()
         old, new = hunk_lines(git("diff", "-U0", base, "--", path))
         full = os.path.join(repo, path)
         if new and os.path.exists(full):
             with open(full) as f:
-                names |= names_at(f.read(), new)
+                hit |= names_at(spans(f.read()), new)
         if old:
-            names |= names_at(git("show", f"{base}:{path}"), old)
-    return names
+            hit |= names_at(spans(git("show", f"{base}:{path}")), old)
+        (names if in_queries else library).update(hit)
+    return names | queries_loading(library, repo)
 
 
 def judge(record: dict) -> list[str]:
