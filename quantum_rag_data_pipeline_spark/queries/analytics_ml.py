@@ -1779,7 +1779,7 @@ def audience_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is engine-specific Datasketches state, so the bound — not
     the value — is the stable contract)."""
     ev = _t(spark, sf_dir, "events")
-    ut = ev.select("event_type", "user_id").distinct().cache()
+    ut = ev.select("event_type", "user_id").distinct()
     totals = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     sk = ev.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id").alias("sk")
@@ -2342,16 +2342,14 @@ def rendezvous_hashing_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("doc_id") * 8 + F.col("s")) * 2654435761) % 4294967296 * 8
             + F.col("s")
         ).alias("key"),
-    ).cache()
+    )
     before = scores.groupBy("doc_id").agg(F.max_by("s", "key").alias("b_shard"))
     after = (
         scores.filter(F.col("s") != 3)
         .groupBy("doc_id")
         .agg(F.max_by("s", "key").alias("a_shard"))
     )
-    # both the per-shard rollup and the global stability scalar consume
-    # `moved`; checkpoint it so the argmax pipeline runs once, not twice
-    moved = before.join(after, "doc_id").cache()
+    moved = before.join(after, "doc_id")
     stability = moved.agg(
         (
             F.sum(

@@ -1818,7 +1818,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oriented = e.select(
         F.when(lower, F.col("u")).otherwise(F.col("v")).alias("s"),
         F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t"),
-    ).cache()
+    )
     e1 = oriented.select(F.col("s").alias("s1"), F.col("t").alias("t1"))
     e2 = oriented.select(F.col("s").alias("s2"), F.col("t").alias("t2"))
     e3 = oriented.select(F.col("s").alias("s3"), F.col("t").alias("t3"))

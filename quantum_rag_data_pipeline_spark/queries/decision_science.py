@@ -540,7 +540,7 @@ def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     vfull = subsets.join(v, "s", "left").select(
         "s",
         F.coalesce(F.col("conv").cast("double") / F.col("n"), F.lit(0.0)).alias("rate"),
-    ).cache()
+    )
     chans = spark.range(0, 3).select(
         F.element_at(
             F.array(F.lit(1), F.lit(2), F.lit(4)), F.col("id").cast("int") + 1
@@ -637,7 +637,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = rev.orderBy(F.desc("cents"), "o_custkey").limit(51).select(
         "cents",
         F.row_number().over(Window.orderBy(F.desc("cents"), "o_custkey")).alias("rnk"),
-    ).cache()
+    )
     thresh = ranked.filter(F.col("rnk") == 51).select(F.col("cents").alias("xk1"))
     terms = (
         ranked.filter(F.col("rnk") <= 50)
@@ -746,7 +746,7 @@ def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y")).cache()
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
     last7 = daily.agg(
         F.date_add(F.max("day"), -6).alias("d0"), F.max("day").alias("d1")
     )
@@ -784,7 +784,6 @@ def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(F.col("y_h").cast("decimal(20,9)")).cast("double")
              / F.count(F.lit(1))).alias("fc")
         )
-        .cache()
     )
     dtot = daily.groupBy("day").agg(F.sum("y").cast("bigint").alias("ty"))
     ttargets = (
@@ -1088,7 +1087,7 @@ def huber_m_estimator_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("bigint").alias("x")
-    ).cache()
+    )
     wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ranked = rev.select(
         "x",
@@ -1273,7 +1272,6 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap = (
         ranked_a.join(ranked_b, "doc_id")
         .select(F.greatest("ra", "rb").alias("m"))
-        .cache()
     )
     depths = spark.range(1, 21).select(
         F.col("id").cast("bigint").alias("d"),
@@ -1401,7 +1399,7 @@ def brier_score_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = F.col("x1").cast("double") / F.col("n1")
     scored = peruser.filter(F.col("n1") > 0).select(
         F.floor(f * 10).cast("bigint").alias("bin"), f.alias("f"), "o"
-    ).cache()
+    )
     bins = scored.groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("nk"),
         F.sum(F.round("f", 9).cast("decimal(20,9)")).cast("double").alias("sf"),
@@ -1646,7 +1644,6 @@ def pinball_loss_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_shipdate").cast("date").alias("day"),
         )
         .agg(F.sum(F.round("l_quantity").cast("bigint")).cast("bigint").alias("d"))
-        .cache()
     )
     wb = Window.partitionBy("brand")
     train = daily.filter(F.col("day") < F.lit("1996-07-01").cast("date")).select(
@@ -1771,7 +1768,7 @@ def v_optimal_histogram_3buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").over(wall).cast("bigint").alias("t1"),
         F.sum(F.col("y") * F.col("y")).over(wall).cast("bigint").alias("t2"),
         F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-    ).cache()
+    )
     b = pre.select(
         F.col("day").alias("cut2"), F.col("i").alias("i2"),
         F.col("c1").alias("b1"), F.col("c2").alias("b2"),
@@ -1880,7 +1877,7 @@ def markov_next_event_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") < F.col("m")).alias("is_train"),
         F.lead("event_type").over(wu).alias("nxt"),
         F.lead(F.col("ts") < F.col("m")).over(wu).alias("nxt_train"),
-    ).cache()
+    )
     trans = (
         seq.filter(F.col("is_train") & F.col("nxt_train") & F.col("nxt").isNotNull())
         .groupBy(F.col("event_type").alias("src"), F.col("nxt").alias("dst"))
@@ -2028,9 +2025,8 @@ def dbscan_core_border_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", "vec",
         sim_ops.norm(F.col("vec"), _DBSCAN_DIM).alias("nrm"),
-    ).cache()
-    n_vecs = v.count()  # drives the bucket schedule AND warms the cache
-    # (counting e would add a second raw parquet scan per invocation)
+    )
+    n_vecs = v.count()  # drives the bucket schedule
     import numpy as np
     import pandas as pd
 
@@ -2145,10 +2141,8 @@ def dbscan_core_border_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE per-group COUNT row (pa=pb=-1 — vec_ids are nonnegative by the
     # data contract, so the marker cannot collide; n_new = this group's
     # first-match candidates). cache() because the count branch and the
-    # two pair branches of the single final plan consume it — uncached,
-    # the FlatMapGroupsInPandas subtree (the gram work) would execute
-    # once per consumer; the frame itself is eps-filtered-pairs-sized,
-    # the smallest materialization in the operator.
+    # two pair branches consume it: uncached, the gram work runs once per
+    # consumer (tools/ab.py, 10 pairs, sf0.1: 8.15 -> 17.69 s, cached won 10/10).
     scan = mem.groupBy("t", "bucket").applyInPandas(
         _bucket_scan, "pa long, pb long, n_new long, ok boolean").cache()
     n_cand = scan.agg(
@@ -2179,12 +2173,14 @@ def dbscan_core_border_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pa", "pb")
     )
     half = near.filter(F.col("ok")).select("pa", "pb").unionByName(half_marginal)
+    # tools/ab.py, 10 pairs, sf0.1: 5.32 -> 6.29 s uncached, cached won 10/10
     sims = half.unionByName(
         half.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
     ).cache()
     neigh = sims.groupBy(F.col("pa").alias("vec_id")).agg(
         (1 + F.count(F.lit(1))).cast("bigint").alias("n_eps")
     )
+    # tools/ab.py, 10 pairs, sf0.1: 4.46 -> 5.81 s uncached, cached won 10/10
     core = neigh.filter(F.col("n_eps") >= _DBSCAN_MINPTS).select("vec_id").cache()
 
     # ids-only frames (core/border, <= n_vecs 8-byte rows) get the same

@@ -112,7 +112,7 @@ def seasonal_adjusted_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         F.round(F.col("dt").cast("double") - F.col("s"), 4)
         .cast("decimal(30,4)").alias("r"),
-    ).cache()
+    )
 
     def exact_median(df: DataFrame, col: str, out: str) -> DataFrame:
         ranked = df.select(
@@ -130,7 +130,7 @@ def seasonal_adjusted_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     absdev = resid.crossJoin(F.broadcast(med)).select(
         "day", "r",
         F.abs((F.col("r") - F.col("m")).cast("decimal(30,4)")).alias("ad"),
-    ).cache()
+    )
     mad = exact_median(absdev, "ad", "mm")
     return (
         absdev.crossJoin(F.broadcast(mad))
@@ -950,7 +950,6 @@ def strict_funnel_bounded_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "v_ts")
         .agg(F.min("cts").alias("c_ts"))
-        .cache()
     )
     purch = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("pu"), F.col("ts").alias("pts")
@@ -964,7 +963,6 @@ def strict_funnel_bounded_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "v_ts", "c_ts")
         .agg(F.min("pts").alias("p_ts"))
-        .cache()
     )
 
     def stage(df: DataFrame, name: str, gap: Column | None) -> DataFrame:
@@ -1073,7 +1071,7 @@ def user_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     weekly = ev.select(
         "user_id", F.date_trunc("week", "ts").cast("date").alias("wk")
-    ).distinct().cache()
+    ).distinct()
     firsts = weekly.groupBy("user_id").agg(F.min("wk").alias("first_wk"))
     prev = weekly.select(
         F.col("user_id").alias("p_user"), F.col("wk").alias("p_wk")
@@ -1202,7 +1200,6 @@ def peak_concurrency_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "sid")
         .agg(F.min("ts").alias("s_ts"), F.max("ts").alias("e_ts"))
-        .cache()
     )
     deltas = sess.select(
         F.col("s_ts").alias("t"), F.lit(1).alias("d"), "user_id"
@@ -1212,6 +1209,7 @@ def peak_concurrency_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep = Window.orderBy("t", "d", "user_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
+    # tools/ab.py, 10 pairs, sf0.1: 1.31 -> 2.23 s uncached, cached won 10/10
     swept = deltas.select(
         "t", F.sum("d").over(sweep).alias("concurrent")
     ).cache()
@@ -1293,7 +1291,7 @@ def pareto_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     swept = pts.withColumn("best", F.max("ed").over(w))
     sky = swept.filter(
         F.col("best").isNull() | (F.col("ed") > F.col("best"))
-    ).cache()
+    )
     size = sky.agg(F.count(F.lit(1)).cast("bigint").alias("skyline_size"))
     return (
         sky.crossJoin(F.broadcast(size))
@@ -2081,7 +2079,7 @@ def calibration_reliability_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("y").cast("bigint").alias("n_pos"),
         F.sum(F.round(F.col("p") * 1000000.0).cast("bigint")).alias("p6_sum"),
-    ).cache()
+    )
     tot = bins.agg(F.sum("n").cast("bigint").alias("nt"))
     ece = (
         bins.agg(
@@ -2187,7 +2185,7 @@ def cumulative_gains_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = deciled.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("y").cast("bigint").alias("n_pos"),
-    ).cache()
+    )
     tot = per.agg(
         F.sum("n_pos").cast("bigint").alias("p"),
         F.sum("n_docs").cast("bigint").alias("n"),
@@ -2559,7 +2557,7 @@ def recsys_coverage_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(
             Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "vec_id")
         ).alias("rk"),
-    ).filter(F.col("rk") <= 5).cache()
+    ).filter(F.col("rk") <= 5)
     a = lists.select("query_id", F.col("vec_id").alias("ia"), F.col("v").alias("va"))
     b = lists.select("query_id", F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
     dist6 = F.round(

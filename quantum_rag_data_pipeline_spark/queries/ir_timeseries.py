@@ -366,7 +366,7 @@ def naive_bayes_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ttr = train.select("lang", F.explode(text_ops.tokens("text")).alias("term"))
     cws = ttr.groupBy("lang", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).cache()
+    )
     ns = cws.groupBy("lang").agg(F.sum("c").cast("bigint").alias("n_s"))
     vocab = cws.select("term").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).cast("bigint").alias("v"))
@@ -589,7 +589,6 @@ def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     dl = d.select("doc_id", F.size(text_ops.tokens("text")).cast("bigint").alias("dl"))
-    dl = dl.cache()
     n = dl.agg(F.sum("dl").cast("bigint").alias("n_tokens"))
     # inline explode — see bm25_keyword_search: an attribute input makes
     # InferFiltersFromGenerate substitute the tokenization into pushed
@@ -600,7 +599,6 @@ def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("term").isin(*_BM25_TERMS))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .cache()
     )
     cf = tf.groupBy("term").agg(F.sum("c").cast("bigint").alias("cf"))
     scored = (
@@ -740,7 +738,6 @@ def rocchio_relevance_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("qp"),
         )
-        .cache()
     )
     scored = (
         e.filter(F.col("vec_id") != 0)
@@ -1003,7 +1000,7 @@ def mann_kendall_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("y")
-    ).cache()
+    )
     idx = daily.select(
         "y",
         F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i"),
@@ -1019,7 +1016,7 @@ def mann_kendall_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("yj") > F.col("y"), 1)
         .when(F.col("yj") < F.col("y"), -1).otherwise(0).alias("sgn"),
         ((F.col("yj") - F.col("y")).cast("double") / (F.col("j") - F.col("i"))).alias("slope"),
-    ).cache()
+    )
     s_stat = pairs.agg(
         F.sum("sgn").cast("bigint").alias("s"),
         F.max("n").alias("n"),
@@ -1329,7 +1326,7 @@ def quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(
             Window.partitionBy("event_type").orderBy("c", "day")
         ).alias("rnk"),
-    ).cache()
+    )
     ref = ranked.groupBy("rnk").agg(
         F.sum("c").cast("bigint").alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -1599,7 +1596,7 @@ def autocorrelation_function(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("y")
-    ).cache()
+    )
     g = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("s"),

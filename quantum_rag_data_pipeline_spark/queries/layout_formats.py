@@ -2631,7 +2631,9 @@ def csv_ingest_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(f"{base}/landing")
     )
-    df = df.cache()  # one scan feeds both the good-row agg and the corrupt count
+    # Spark requires it: a query on a raw CSV scan that reads only
+    # `_corrupt_record` fails with QUERY_ONLY_CORRUPT_RECORD_COLUMN
+    df = df.cache()
     n_corrupt = F.lit(
         df.filter(F.col("_corrupt_record").isNotNull()).count()
     ).cast("bigint")

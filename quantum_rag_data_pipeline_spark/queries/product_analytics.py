@@ -212,7 +212,6 @@ def negative_sampling_implicit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_orderkey") % 100).alias("u"), F.col("l_partkey").alias("item")
         )
         .distinct()
-        .cache()
     )
     items = pos.select("item").distinct()
     ranked_items = items.select(
@@ -820,7 +819,7 @@ def item_debut_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     sales = li.join(o, o["o_orderkey"] == li["l_orderkey"]).select(
         "l_partkey", F.col("o_orderdate").cast("date").alias("day")
-    ).cache()
+    )
     debut = sales.groupBy("l_partkey").agg(F.min("day").alias("first_day"))
     s2 = sales.select(F.col("l_partkey").alias("pk"), F.col("day").alias("s_day"))
     early = (
@@ -897,8 +896,7 @@ def dn_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a single pass with per-horizon eligible denominators. Exact-day
     (not rolling-window) retention, the stricter convention."""
     ev = _t(spark, sf_dir, "events")
-    days = ev.select("user_id", F.to_date("ts").alias("day")).distinct() \
-        .cache()
+    days = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     firsts = days.groupBy("user_id").agg(F.min("day").alias("d0"))
     mx = days.agg(F.max("day").alias("end_day"))
     eligible = firsts.crossJoin(F.broadcast(mx)).select(
@@ -1186,7 +1184,6 @@ def littles_law_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros(F.min("ts")).alias("s_us"),
             F.unix_micros(F.max("ts")).alias("e_us"),
         )
-        .cache()
     )
     horizon = sess.agg(F.min("s_us").alias("t0"), F.max("e_us").alias("t1"))
     agg = sess.agg(
@@ -1418,7 +1415,6 @@ def mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") / 50.0).cast("bigint").alias("y"),
     )
     joint = base.groupBy("x", "y").agg(F.count(F.lit(1)).cast("bigint").alias("cxy"))
-    joint = joint.cache()
     mx = joint.groupBy("x").agg(F.sum("cxy").cast("bigint").alias("cx"))
     my = joint.groupBy("y").agg(F.sum("cxy").cast("bigint").alias("cy"))
     tot = joint.agg(F.sum("cxy").cast("bigint").alias("n"))
@@ -1604,7 +1600,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joint = base.groupBy("x", "y").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
-    ).cache()
+    )
     mx = joint.groupBy("x").agg(F.sum("o").cast("bigint").alias("cx"))
     my = joint.groupBy("y").agg(F.sum("o").cast("bigint").alias("cy"))
     kx = mx.agg(F.count(F.lit(1)).cast("bigint").alias("kx"))
@@ -1714,7 +1710,7 @@ def decision_stump_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = base.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("p"),
-    ).cache()
+    )
     tot = buckets.agg(
         F.sum("n").cast("bigint").alias("nt"), F.sum("p").cast("bigint").alias("pt")
     )

@@ -251,6 +251,31 @@ def test_ab_parent_imports_no_engine_package():
     assert r.stdout.strip().splitlines()[-1] == "[]"
 
 
+def test_tools_find_the_package_from_their_own_file():
+    """No tool puts a fixed checkout on ``sys.path`` or names this
+    checkout's absolute path: run from a clone or worktree, a gate must
+    import the package under test, not another copy."""
+    import ast
+
+    tools = os.path.join(REPO, "tools")
+    hits = []
+    for name in sorted(os.listdir(tools)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(tools, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and REPO in node.value):
+                hits.append(f"{name}:{node.lineno} names {node.value!r}")
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("insert", "append")
+                    and ast.unparse(node.func.value) == "sys.path"
+                    and isinstance(node.args[-1], ast.Constant)):
+                hits.append(f"{name}:{node.lineno} puts {node.args[-1].value!r} on sys.path")
+    assert not hits, hits
+
+
 def test_ab_arms_are_isolated(sf_dir):
     """Two pairs of `ab.py HEAD .+spark.sql.shuffle.partitions=3`: order
     alternates, the HEAD child imports the package from its temporary

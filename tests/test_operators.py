@@ -190,14 +190,20 @@ def test_ngram_jaccard_hashed_candidate_key(spark):
     spark.catalog.clearCache()
 
 
-def test_shingle_set_queries_reuse_the_shuffle_uncached(spark, sf_dir):
-    """The rarest-first shingle sets are not cached: the final adaptive
-    plans of the n-gram Jaccard and containment queries hold no cached
-    relation and read the sets' shuffle back as a ``ReusedExchange``."""
+def test_shared_frame_queries_reuse_the_shuffle_uncached(spark, sf_dir):
+    """A frame that several branches of one query read is not cached:
+    the final adaptive plans of the n-gram Jaccard and containment
+    queries (the rarest-first shingle sets), ``mutual_information_features``
+    (the joint counts), ``forecast_reconciliation`` (the daily counts and
+    forecasts) and ``heaps_law_vocab_growth`` (the token rollups) hold no
+    cached relation and read the shared shuffle back as a
+    ``ReusedExchange``."""
     from quantum_rag_data_pipeline_spark.queries import QUERIES
     from tools.ab import _plan_ops
 
-    for name in ("dedup_ngram_jaccard", "dedup_shingle_containment"):
+    for name in ("dedup_ngram_jaccard", "dedup_shingle_containment",
+                 "mutual_information_features", "forecast_reconciliation",
+                 "heaps_law_vocab_growth"):
         spark.catalog.clearCache()
         df = QUERIES[name](spark, sf_dir)
         df.toArrow()

@@ -14,10 +14,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # queries where Python (Arrow) stages are by design
 UDF_EXPECTED = {"ann_lsh_topk", "multimodal_features", "multimodal_resize_and_frames",

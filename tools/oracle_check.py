@@ -67,7 +67,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from quantum_rag_data_pipeline_spark.session import get_spark
 

@@ -34,6 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ab import warm_session  # noqa: E402 — tools/ is on sys.path when run as a script
 from quantum_rag_data_pipeline_spark.queries import QUERIES
 from quantum_rag_data_pipeline_spark.session import get_spark
 
@@ -84,8 +85,7 @@ def main() -> None:
         sys.exit("run tools/gen_scaledata.py first")
     spark = get_spark(app_name="scale_curve")
     spark.sparkContext.setLogLevel("ERROR")
-    QUERIES["a1_metric_catalog"](spark, SF01).write.mode("overwrite") \
-        .format("noop").save()
+    warm_session(spark, base)
     results = {}
     for name in names:
         fn = QUERIES[name]
